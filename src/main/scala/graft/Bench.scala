@@ -6,12 +6,20 @@ import graft.queries.Registry
 /** Headline benchmark: times the bench-flagged registry queries on
   * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver. */
 object Bench {
+  /** The session's core count from `SPARK_GRAFT_CPUS` (32 when unset). It
+    * is echoed unquoted into the JSON line, so only a positive integer is
+    * accepted; `local[*]` spellings are refused. */
+  def coreCount(raw: Option[String]): Int = raw.fold(32) { s =>
+    s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer core count, got '$s'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = coreCount(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -2,6 +2,7 @@ package graft.hist
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Histogram axis specifications — Spark restatement of the reference's
   * axis factory (reference `add_hist_axis`: columnflow/hist_util.py:145-208;
@@ -47,18 +48,10 @@ object Axis {
     require(edges.size >= 2 && edges.sliding(2).forall(p => p(0) < p(1)),
       "edges must be ascending")
     val nBins: Int = edges.size - 1
-    def binId(v: Column): Column = {
-      val lo = edges.head; val hi = edges.last
-      // width_bucket-style chain; edge list is small (config-declared).
-      val inRange = edges.init.zipWithIndex.reverse.foldLeft(lit(nBins - 1): Column) {
-        case (acc, (e, i)) => when(v < edges(i + 1), i).otherwise(acc)
-      }
-      when(v.isNull, lit(null))
-        .when(v < lo, -1)
-        .when(v === hi, nBins - 1)
-        .when(v >= hi, nBins)
-        .otherwise(inRange.cast("int"))
-    }
+    /** One [[VariableBin]] kernel over the value as a double: the same
+      * ids as [[binIdSql]], reading the value once. */
+    def binId(v: Column): Column =
+      ColumnBridge.column(VariableBin(ColumnBridge.expression(v.cast("double")), edges.toIndexedSeq))
     def binIdSql(e: String): String = {
       val lo = edges.head; val hi = edges.last
       val chain = edges.init.indices.map { i =>

@@ -1,7 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 
 /** The orchestration layer: a DAG of named stages materializing parquet
   * checkpoints, with completed outputs skipped on re-run — the law/luigi
@@ -14,16 +19,42 @@ import java.nio.file.{Files, Paths}
   * resumes from the last completed checkpoint, and a changed stage only
   * invalidates its own subtree (delete its checkpoint dir).
   *
+  * A checkpoint directory is complete when it holds Spark's `_SUCCESS`,
+  * the `_GRAFT_SCHEMA` this class records after the write (the schema as
+  * JSON) and, for a versioned call, a matching `_GRAFT_VERSION`. Anything
+  * less is cleared and rebuilt. Checkpoints are read back with the
+  * recorded schema, so neither a build nor a hit runs a schema-inference
+  * job.
+  *
   * Scale notes: checkpoints default to snappy parquet with file sizing
-  * left to AQE; pass `buckets > 0` to write bucketed-by-key tables so the
-  * downstream diff merge is a co-partitioned join without a shuffle.
+  * left to AQE; write a bucketed-by-key checkpoint with
+  * `UpdateMerge.bucketedCheckpoint` when the downstream diff merge should
+  * be a co-partitioned join without a shuffle.
   */
 final class Pipeline(spark: SparkSession, root: String) {
+  import Pipeline._
 
-  private def done(name: String): Boolean =
-    Files.exists(Paths.get(s"$root/$name/_SUCCESS"))
+  private def dir(name: String): String = s"$root/$name"
+  private def file(name: String, f: String): Path = Paths.get(dir(name), f)
+  private def readString(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
 
-  private def versionFile(name: String) = Paths.get(s"$root/$name/_GRAFT_VERSION")
+  private def complete(name: String, version: String): Boolean =
+    Files.exists(file(name, "_SUCCESS")) && Files.exists(file(name, SchemaFile)) &&
+      (version.isEmpty || {
+        val vf = file(name, VersionFile)
+        Files.exists(vf) && readString(vf) == version
+      })
+
+  /** Mark a written checkpoint complete; the schema file goes last. */
+  private def seal(name: String, schema: StructType, version: String): Unit = {
+    if (version.nonEmpty) Files.write(file(name, VersionFile), version.getBytes(UTF_8))
+    Files.write(file(name, SchemaFile), schema.json.getBytes(UTF_8)): Unit
+  }
+
+  private def load(name: String): DataFrame = {
+    val schema = DataType.fromJson(readString(file(name, SchemaFile))).asInstanceOf[StructType]
+    spark.read.schema(schema).parquet(dir(name))
+  }
 
   /** Run `build` unless a completed checkpoint exists; return the
     * checkpointed frame either way.
@@ -46,30 +77,67 @@ final class Pipeline(spark: SparkSession, root: String) {
     * every consumer. Already-completed checkpoints are not re-audited. */
   def stageChecked(name: String, version: String = "", checkFinite: Boolean = false)(
       build: => DataFrame): DataFrame = {
-    val stale = version.nonEmpty && done(name) && {
-      val vf = versionFile(name)
-      !Files.exists(vf) || new String(Files.readAllBytes(vf), "UTF-8") != version
-    }
-    if (stale) invalidate(name)
-    if (!done(name)) {
-      build.write.mode("overwrite").parquet(s"$root/$name")
+    if (!complete(name, version)) {
+      invalidate(name)
+      val df = build
+      df.write.parquet(dir(name))
+      // the schema Spark reads back: every field nullable
+      val schema = ColumnBridge.asNullable(df.schema)
       if (checkFinite)
-        try graft.core.Integrity.assertFinite(spark.read.parquet(s"$root/$name"))
+        try graft.core.Integrity.assertFinite(spark.read.schema(schema).parquet(dir(name)))
         catch { case e: IllegalArgumentException => invalidate(name); throw e }
-      if (version.nonEmpty)
-        Files.write(versionFile(name), version.getBytes("UTF-8")): Unit
+      seal(name, schema, version)
     }
-    spark.read.parquet(s"$root/$name")
+    load(name)
   }
 
   /** Stage variant expanded once per shift: `stageShifted("select",
     * shifts)(s => ...)` materializes `select/shift=<name>` per shift —
-    * the reference's shift-aware task families. */
+    * the reference's shift-aware task families.
+    *
+    * Every missing or stale shift is built in declaration order on the
+    * caller's thread; the builds are tagged with a literal `shift` column
+    * and written as one partitioned job. Each shift directory then gets
+    * its own `_SUCCESS`, `_GRAFT_VERSION` and `_GRAFT_SCHEMA`, so a shift
+    * stays skippable, invalidatable and readable on its own. Contract:
+    *  - the builds must return the same columns and types, and no `shift`
+    *    column; shift names must be valid partition-path values;
+    *  - a failed write marks no shift as done;
+    *  - the builds of one shifted stage must not read each other's
+    *    checkpoints: none is written until all of them are built. */
   def stageShifted(name: String, shifts: Seq[Shift], version: String = "")(
-      build: Shift => DataFrame): Map[String, DataFrame] =
-    shifts.map { s =>
-      s.name -> stage(s"$name/shift=${s.name}", version)(build(s))
-    }.toMap
+      build: Shift => DataFrame): Map[String, DataFrame] = {
+    def part(s: Shift) = s"$name/shift=${s.name}"
+    shifts.groupBy(_.name).foreach { case (n, g) =>
+      require(g.size == 1, s"stage $name: shift $n is declared ${g.size} times")
+      require(n.nonEmpty && ExternalCatalogUtils.escapePathName(n) == n,
+        s"stage $name: shift name '$n' is not a valid partition-path value")
+    }
+    val missing = shifts.filterNot(s => complete(part(s), version))
+    if (missing.nonEmpty) {
+      missing.foreach(s => invalidate(part(s)))
+      val built = missing.map(s => s -> build(s))
+      val schema = ColumnBridge.asNullable(built.head._2.schema)
+      built.foreach { case (s, df) =>
+        require(!df.columns.exists(_.equalsIgnoreCase(ShiftColumn)),
+          s"stage $name: the build of shift ${s.name} already has a $ShiftColumn column")
+        require(ColumnBridge.asNullable(df.schema) == schema,
+          s"stage $name: shift ${s.name} builds ${df.schema.simpleString}, " +
+            s"shift ${missing.head.name} builds ${schema.simpleString}")
+      }
+      built.map { case (s, df) => df.withColumn(ShiftColumn, lit(s.name)) }.reduce(_ union _)
+        .write.mode("append").partitionBy(ShiftColumn).parquet(dir(name))
+      // the job's marker lands at the stage root; completeness is per shift
+      Files.deleteIfExists(file(name, "_SUCCESS"))
+      missing.foreach { s =>
+        // a shift with no rows gets no directory from the partitioned write
+        Files.createDirectories(Paths.get(dir(part(s))))
+        Files.write(file(part(s), "_SUCCESS"), Array.emptyByteArray)
+        seal(part(s), schema, version)
+      }
+    }
+    shifts.map(s => s.name -> load(part(s))).toMap
+  }
 
   /** Drop a stage's checkpoint (and thereby force downstream rebuilds on
     * next run — caller controls subtree invalidation). */
@@ -79,4 +147,10 @@ final class Pipeline(spark: SparkSession, root: String) {
     }
     rm(new java.io.File(s"$root/$name"))
   }
+}
+
+object Pipeline {
+  private val SchemaFile = "_GRAFT_SCHEMA"
+  private val VersionFile = "_GRAFT_VERSION"
+  private val ShiftColumn = "shift"
 }

@@ -12,6 +12,11 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The schema with every field, element and value nullable — what a
+    * file source reads back (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Drain the listener bus (`listenerBus` is `private[spark]`): lets
     * measurement mains wait for async stage/task events instead of racing
     * them with a fixed sleep. */

@@ -5,8 +5,15 @@ import graft.core.Route
 import graft.functions.Seeds
 import graft.lookup.BinnedTable
 import graft.hist.Axis
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.nio.file.{Files, Paths}
 
 class PipelineSpec extends SparkSpec {
 
@@ -91,6 +98,167 @@ class PipelineSpec extends SparkSpec {
     assert(outs.keySet == Set("nominal", "s_up", "s_down"))
     assert(outs("s_up").head.getDouble(1) == 11.0)
     assert(outs("s_down").head.getDouble(1) == 9.0)
+  }
+
+  /** Parquet writes under `root` while `body` runs. */
+  private def writesUnder(root: String)(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.foreach {
+          case w: InsertIntoHadoopFsRelationCommand if w.outputPath.toString.contains(root) =>
+            n.incrementAndGet(): Unit
+          case _ =>
+        }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; ColumnBridge.waitListenerBusEmpty(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    n.get
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+    }
+    ColumnBridge.waitListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ColumnBridge.waitListenerBusEmpty(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    n.get
+  }
+
+  private val wShifts = Shift.Nominal +: Shift.pair("s", "w")
+
+  private def wFrame: DataFrame = {
+    val s = spark
+    import s.implicits._
+    Seq((1L, 10.0, 11.0, 9.0), (2L, 20.0, 22.0, 18.0)).toDF("event", "w", "w_s_up", "w_s_down")
+  }
+
+  test("stageShifted writes all missing shifts in one job") {
+    val root = Files.createTempDirectory("graft-pipe-one").toString
+    val pipe = new Pipeline(spark, root)
+    var outs = Map.empty[String, DataFrame]
+    val writes = writesUnder(root) {
+      outs = pipe.stageShifted("weights", wShifts, "v1")(sh => sh(wFrame).select("event", "w"))
+    }
+    assert(writes == 1)
+    assert(outs("s_up").orderBy("event").collect().map(_.getDouble(1)).toSeq == Seq(11.0, 22.0))
+    assert(outs("nominal").columns.toSeq == Seq("event", "w"))
+    for (sh <- wShifts; f <- Seq("_SUCCESS", "_GRAFT_VERSION", "_GRAFT_SCHEMA"))
+      assert(Files.exists(Paths.get(root, "weights", s"shift=${sh.name}", f)), s"${sh.name}/$f")
+    // a full hit writes nothing
+    assert(writesUnder(root)(pipe.stageShifted("weights", wShifts, "v1")(_ => fail("rebuilt"))) == 0)
+  }
+
+  test("stageShifted rebuilds only missing or stale shifts") {
+    val root = Files.createTempDirectory("graft-pipe-miss").toString
+    val pipe = new Pipeline(spark, root)
+    val built = scala.collection.mutable.ArrayBuffer.empty[String]
+    def run(version: String) = pipe.stageShifted("weights", wShifts, version) { sh =>
+      built += sh.name; sh(wFrame).select("event", "w")
+    }
+    run("v1")
+    assert(built == Seq("nominal", "s_up", "s_down"))
+    built.clear()
+    pipe.invalidate("weights/shift=s_up")
+    Files.write(Paths.get(root, "weights", "shift=s_down", "_GRAFT_VERSION"), "v0".getBytes("UTF-8"))
+    val outs = run("v1")
+    assert(built == Seq("s_up", "s_down")) // declaration order, nominal kept
+    assert(outs("s_down").orderBy("event").head.getDouble(1) == 9.0)
+    assert(outs("nominal").count() == 2)
+    built.clear()
+    run("v2")
+    assert(built == Seq("nominal", "s_up", "s_down"))
+  }
+
+  test("stageShifted gives a shift with no rows an empty, readable checkpoint") {
+    val root = Files.createTempDirectory("graft-pipe-empty").toString
+    val pipe = new Pipeline(spark, root)
+    var builds = 0
+    def run() = pipe.stageShifted("weights", wShifts) { sh =>
+      builds += 1
+      val df = sh(wFrame).select("event", "w")
+      if (sh.name == "s_down") df.filter(lit(false)) else df
+    }
+    val outs = run()
+    assert(outs("s_down").count() == 0)
+    assert(outs("s_down").schema == outs("nominal").schema)
+    assert(outs("s_down").schema.map(f => f.name -> f.dataType) ==
+      Seq("event" -> LongType, "w" -> DoubleType))
+    assert(run()("s_down").count() == 0)
+    assert(builds == 3) // the empty checkpoint is complete: second run is a hit
+  }
+
+  test("stageShifted clears a leftover shift directory instead of appending to it") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-pipe-left").toString
+    val pipe = new Pipeline(spark, root)
+    // an interrupted earlier run: data files but no _SUCCESS
+    val leftover = s"$root/weights/shift=s_up"
+    Seq((7L, 70.0)).toDF("event", "w").write.parquet(leftover)
+    Files.delete(Paths.get(leftover, "_SUCCESS"))
+    val outs = pipe.stageShifted("weights", wShifts)(sh => sh(wFrame).select("event", "w"))
+    assert(outs("s_up").orderBy("event").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+  }
+
+  test("stageShifted rejects a shift column and unescapable shift names before building") {
+    val root = Files.createTempDirectory("graft-pipe-bad").toString
+    val pipe = new Pipeline(spark, root)
+    val e1 = intercept[IllegalArgumentException] {
+      pipe.stageShifted("weights", wShifts)(sh => sh(wFrame).withColumn("shift", lit("x")))
+    }
+    assert(e1.getMessage.contains("shift column"))
+    var builds = 0
+    for (bad <- Seq("jec/up", "a=b", "x:y", "")) {
+      val e2 = intercept[IllegalArgumentException] {
+        pipe.stageShifted("weights", Seq(Shift.Nominal, Shift(bad, Map.empty))) { sh =>
+          builds += 1; sh(wFrame)
+        }
+      }
+      assert(e2.getMessage.contains("partition-path"), bad)
+    }
+    assert(builds == 0)
+    assert(!Files.exists(Paths.get(root, "weights", "shift=nominal", "_SUCCESS")))
+  }
+
+  test("checkpoints read back with the schema Spark infers, without a job on a hit") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-pipe-schema").toString
+    val pipe = new Pipeline(spark, root)
+    val meta = new MetadataBuilder().putString("unit", "GeV").build()
+    def nested = Seq((1L, Seq((1.5f, Seq(1, 2))), Map("a" -> (2.0, "x"))),
+        (2L, Seq.empty[(Float, Seq[Int])], Map.empty[String, (Double, String)]))
+      .toDF("event", "Jet", "aux")
+      .withColumn("Jet", col("Jet").cast("array<struct<pt:float,idx:array<int>>>"))
+      .withColumn("ht", lit(3.0)).withMetadata("ht", meta)
+    val out = pipe.stage("nested")(nested)
+    val inferred = spark.read.parquet(s"$root/nested").schema
+    assert(out.schema == inferred)
+    assert(out.schema("ht").metadata == meta)
+    assert(jobsDuring(assert(pipe.stage("nested")(fail("rebuilt")).schema == inferred)) == 0)
+    val shifted = pipe.stageShifted("nestedS", Seq(Shift.Nominal))(_ => nested)
+    assert(shifted("nominal").schema == spark.read.parquet(s"$root/nestedS/shift=nominal").schema)
+    assert(shifted("nominal").orderBy("event").head.getAs[Map[String, Any]]("aux").keySet == Set("a"))
+  }
+
+  test("a checkpoint without a recorded schema is rebuilt") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-pipe-noschema").toString
+    val pipe = new Pipeline(spark, root)
+    var builds = 0
+    def build = { builds += 1; Seq((1L, 2.0)).toDF("event", "x") }
+    pipe.stage("calib")(build)
+    Files.delete(Paths.get(root, "calib", "_GRAFT_SCHEMA"))
+    assert(pipe.stage("calib")(build).count() == 1)
+    assert(builds == 2)
   }
 
   test("portable fold matches its SQL mirror and is stable") {
