@@ -6,10 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
 /** Bin id of a double over ascending `edges` (the [[Axis.Variable]]
-  * kernel): one read of the input and a binary search, where the CASE
-  * chain it replaces evaluated its input about 2n+4 times. Inside an
-  * interpreted `transform` lambda each of those reads re-evaluates the
-  * whole input subtree.
+  * kernel): one read of the input and a binary search. Reading once
+  * matters inside an interpreted `transform` lambda, where every read
+  * re-evaluates the whole input subtree.
   *
   * Ids follow the axis contract: NaN → n (Spark orders NaN above every
   * number), v < lo → −1, v = hi → n−1, v > hi → n, otherwise the i with

@@ -64,8 +64,8 @@ final class Pipeline(spark: SparkSession, root: String) {
     * changes when the stage's code or config changes (a config hash, a
     * git revision, a bumped literal) and a checkpoint written under a
     * DIFFERENT version is invalidated and rebuilt instead of silently
-    * reused. The empty default keeps _SUCCESS-only semantics for
-    * exploratory use. */
+    * reused. The empty default skips the version check, for exploratory
+    * use. */
   def stage(name: String, version: String = "")(build: => DataFrame): DataFrame =
     stageChecked(name, version, checkFinite = false)(build)
 
@@ -107,7 +107,7 @@ final class Pipeline(spark: SparkSession, root: String) {
     *    checkpoints: none is written until all of them are built. */
   def stageShifted(name: String, shifts: Seq[Shift], version: String = "")(
       build: Shift => DataFrame): Map[String, DataFrame] = {
-    def part(s: Shift) = s"$name/shift=${s.name}"
+    def part(s: Shift) = s"$name/$ShiftColumn=${s.name}"
     shifts.groupBy(_.name).foreach { case (n, g) =>
       require(g.size == 1, s"stage $name: shift $n is declared ${g.size} times")
       require(n.nonEmpty && ExternalCatalogUtils.escapePathName(n) == n,
