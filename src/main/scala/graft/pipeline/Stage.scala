@@ -97,17 +97,25 @@ final class Pipeline(spark: SparkSession, root: String) {
     *
     * Every missing or stale shift is built in declaration order on the
     * caller's thread; the builds are tagged with a literal `shift` column
-    * and written as one partitioned job. Each shift directory then gets
-    * its own `_SUCCESS`, `_GRAFT_VERSION` and `_GRAFT_SCHEMA`, so a shift
-    * stays skippable, invalidatable and readable on its own. Contract:
-    *  - the builds must return the same columns and types, and no `shift`
-    *    column; shift names must be valid partition-path values;
-    *  - a failed write marks no shift as done;
+    * and written as one partitioned job per distinct schema (one job when
+    * all shifts build the same columns and types). Each shift directory
+    * then gets its own `_SUCCESS`, `_GRAFT_VERSION` and `_GRAFT_SCHEMA`,
+    * so a shift stays skippable, invalidatable and readable on its own.
+    * Contract:
+    *  - no build returns a `shift` column; shift names must be valid
+    *    partition-path values;
+    *  - a failed write marks no shift as done, and the next call clears
+    *    whatever it left under `<name>/` except complete shifts;
     *  - the builds of one shifted stage must not read each other's
-    *    checkpoints: none is written until all of them are built. */
+    *    checkpoints: none is written until all of them are built.
+    *
+    * The partitioned write sorts each task's rows by `shift` before
+    * writing them; this costs less than the per-shift jobs it replaces
+    * while a task's checkpoint rows fit in execution memory. */
   def stageShifted(name: String, shifts: Seq[Shift], version: String = "")(
       build: Shift => DataFrame): Map[String, DataFrame] = {
-    def part(s: Shift) = s"$name/$ShiftColumn=${s.name}"
+    def entry(s: Shift) = s"$ShiftColumn=${s.name}"
+    def part(s: Shift) = s"$name/${entry(s)}"
     shifts.groupBy(_.name).foreach { case (n, g) =>
       require(g.size == 1, s"stage $name: shift $n is declared ${g.size} times")
       require(n.nonEmpty && ExternalCatalogUtils.escapePathName(n) == n,
@@ -115,21 +123,29 @@ final class Pipeline(spark: SparkSession, root: String) {
     }
     val missing = shifts.filterNot(s => complete(part(s), version))
     if (missing.nonEmpty) {
-      missing.foreach(s => invalidate(part(s)))
-      val built = missing.map(s => s -> build(s))
-      val schema = ColumnBridge.asNullable(built.head._2.schema)
-      built.foreach { case (s, df) =>
+      // The write appends into the stage root, and a job commit merges every
+      // committed task under `_temporary`, including those of a write whose
+      // driver died: keep only the directories of complete shifts.
+      val rebuilt = missing.map(entry).toSet
+      Option(new java.io.File(dir(name)).listFiles).foreach(_.foreach { f =>
+        val n = f.getName
+        if (!n.startsWith(s"$ShiftColumn=") || rebuilt(n) || !complete(s"$name/$n", "")) rmTree(f)
+      })
+      val built = missing.map { s =>
+        val df = build(s)
         require(!df.columns.exists(_.equalsIgnoreCase(ShiftColumn)),
           s"stage $name: the build of shift ${s.name} already has a $ShiftColumn column")
-        require(ColumnBridge.asNullable(df.schema) == schema,
-          s"stage $name: shift ${s.name} builds ${df.schema.simpleString}, " +
-            s"shift ${missing.head.name} builds ${schema.simpleString}")
+        (s, df, ColumnBridge.asNullable(df.schema))
       }
-      built.map { case (s, df) => df.withColumn(ShiftColumn, lit(s.name)) }.reduce(_ union _)
-        .write.mode("append").partitionBy(ShiftColumn).parquet(dir(name))
+      // the union is positional, so only identical schemas share a job
+      built.map(_._3).distinct.foreach { schema =>
+        built.collect { case (s, df, `schema`) => df.withColumn(ShiftColumn, lit(s.name)) }
+          .reduce(_ union _)
+          .write.mode("append").partitionBy(ShiftColumn).parquet(dir(name))
+      }
       // the job's marker lands at the stage root; completeness is per shift
       Files.deleteIfExists(file(name, "_SUCCESS"))
-      missing.foreach { s =>
+      built.foreach { case (s, _, schema) =>
         // a shift with no rows gets no directory from the partitioned write
         Files.createDirectories(Paths.get(dir(part(s))))
         Files.write(file(part(s), "_SUCCESS"), Array.emptyByteArray)
@@ -141,11 +157,10 @@ final class Pipeline(spark: SparkSession, root: String) {
 
   /** Drop a stage's checkpoint (and thereby force downstream rebuilds on
     * next run — caller controls subtree invalidation). */
-  def invalidate(name: String): Unit = {
-    def rm(p: java.io.File): Unit = {
-      Option(p.listFiles).foreach(_.foreach(rm)); p.delete(): Unit
-    }
-    rm(new java.io.File(s"$root/$name"))
+  def invalidate(name: String): Unit = rmTree(new java.io.File(s"$root/$name"))
+
+  private def rmTree(p: java.io.File): Unit = {
+    Option(p.listFiles).foreach(_.foreach(rmTree)); p.delete(): Unit
   }
 }
 

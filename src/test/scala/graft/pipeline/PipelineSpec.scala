@@ -207,6 +207,54 @@ class PipelineSpec extends SparkSpec {
     assert(outs("s_up").orderBy("event").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
   }
 
+  test("stageShifted drops task output an interrupted write left under the stage root") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-pipe-tmp").toString
+    val pipe = new Pipeline(spark, root)
+    // a complete shift from an earlier declaration is kept
+    pipe.stageShifted("weights", Seq(Shift("old", Map.empty)))(_ => wFrame.select("event", "w"))
+    // a driver that died between task commit and job commit leaves committed
+    // task output that the next job commit would merge into the new shift
+    val stale = Files.createTempDirectory("graft-pipe-stale").toString
+    Seq((7L, 70.0)).toDF("event", "w").write.mode("overwrite").parquet(stale)
+    val task = Paths.get(root, "weights", "_temporary", "0", "task_x", "shift=s_up")
+    Files.createDirectories(task)
+    Files.list(Paths.get(stale)).filter(_.getFileName.toString.endsWith(".parquet"))
+      .forEach(p => Files.copy(p, task.resolve(p.getFileName)): Unit)
+    Files.write(Paths.get(root, "weights", "part-stray.parquet"), Array[Byte](1, 2, 3))
+    val outs = pipe.stageShifted("weights", wShifts)(sh => sh(wFrame).select("event", "w"))
+    assert(outs("s_up").orderBy("event").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    assert(!Files.exists(Paths.get(root, "weights", "_temporary")))
+    assert(!Files.exists(Paths.get(root, "weights", "part-stray.parquet")))
+    val old = pipe.stageShifted("weights", Seq(Shift("old", Map.empty)))(_ => fail("rebuilt"))
+    assert(old("old").count() == 2)
+  }
+
+  test("stageShifted keeps each shift's own schema when the builds differ") {
+    val root = Files.createTempDirectory("graft-pipe-mixed").toString
+    val pipe = new Pipeline(spark, root)
+    val meta = new MetadataBuilder().putString("unit", "GeV").build()
+    var outs = Map.empty[String, DataFrame]
+    val writes = writesUnder(root) {
+      outs = pipe.stageShifted("weights", wShifts) { sh =>
+        val df = sh(wFrame).select("event", "w")
+        sh.name match {
+          case "s_up" => df.withColumn("w", col("w").cast("float"))
+          case "s_down" => df.withMetadata("w", meta)
+          case _ => df
+        }
+      }
+    }
+    assert(writes == 3) // one job per distinct schema
+    assert(outs("nominal").schema("w").dataType == DoubleType)
+    assert(outs("s_up").schema("w").dataType == FloatType)
+    assert(outs("s_down").schema("w").metadata == meta)
+    for (sh <- wShifts)
+      assert(outs(sh.name).schema == spark.read.parquet(s"$root/weights/shift=${sh.name}").schema)
+    assert(outs("s_up").orderBy("event").collect().map(_.getFloat(1)).toSeq == Seq(11.0f, 22.0f))
+  }
+
   test("stageShifted rejects a shift column and unescapable shift names before building") {
     val root = Files.createTempDirectory("graft-pipe-bad").toString
     val pipe = new Pipeline(spark, root)
