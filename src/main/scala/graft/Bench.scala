@@ -1,32 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
 /** Headline benchmark: times the bench-flagged registry queries on
   * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver. */
 object Bench {
-  /** The session's core count from `SPARK_GRAFT_CPUS` (32 when unset). It
-    * is echoed unquoted into the JSON line, so only a positive integer is
-    * accepted; `local[*]` spellings are refused. */
-  def coreCount(raw: Option[String]): Int = raw.fold(32) { s =>
-    s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer core count, got '$s'"))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = coreCount(sys.env.get("SPARK_GRAFT_CPUS"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus)
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
@@ -60,18 +42,28 @@ object Bench {
     // Best of two timed runs: the bench host is shared, and a single
     // sample conflates plan cost with neighbor noise (round-1 driver run
     // measured 6-15x the local steady state on identical plans).
-    val results = names.map(n => n -> runOnce(n))
-      .map { case (n, t1) =>
-        val t2 = runOnce(n)
-        n -> (if (t1 < 0 || t2 < 0) math.max(t1, t2) else math.min(t1, t2))
-      }
+    val first = names.map(runOnce)
+    val second = names.map(runOnce)
+    val runs = names.zip(first.zip(second))
+    val results = runs.map { case (n, (t1, t2)) =>
+      n -> (if (t1 < 0 || t2 < 0) math.max(t1, t2) else math.min(t1, t2))
+    }
+    val failed = runs.collect { case (n, (t1, t2)) if t1 < 0 || t2 < 0 => n }
+    println(jsonLine(results, failed, sfDir, cpus))
+    spark.stop()
+  }
+
+  /** Bench's one JSON line. `failed` lists each query with a timed run that
+    * threw, so a failure never vanishes from `value` unseen; the keys
+    * before it keep their original bytes. "cpus" echoes the core count the
+    * session ran with, so a scaling harness can confirm SPARK_GRAFT_CPUS
+    * took effect (r9 flagged suspect_cpus_ignored on flat 8-vs-32 ratios). */
+  def jsonLine(results: Seq[(String, Double)], failed: Seq[String], sfDir: String,
+      cpus: Int): String = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // "cpus" echoes the core count the session actually ran with, so the
-    // driver's scaling harness can confirm SPARK_GRAFT_CPUS took effect
-    // (r9 flagged suspect_cpus_ignored on flat 8-vs-32 ratios).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus}""")
-    spark.stop()
+    val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"failed":$fs}"""
   }
 }

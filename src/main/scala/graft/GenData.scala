@@ -34,10 +34,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * scaling becomes measurable locally (guide §2.6/§6: scan parallelism is
   * bounded by splittable input units). Row CONTENT is unchanged — every
   * column is still a pure function of the row id — only the file layout
-  * differs; round-robin placement is deterministic at a fixed file count
-  * (sortBeforeRepartition, SPARK-23207).
+  * differs. The row set is deterministic; which part file a row lands in
+  * is stable only at a fixed core count, because round-robin placement
+  * follows the upstream partitioning.
   *
-  * Usage: runMain graft.GenData <outDir> <sf> [filesPerTable]
+  * Usage: runMain graft.Tool gen <outDir> <sf> [filesPerTable]
   */
 object GenData {
   private def h(seed: Int, cols: org.apache.spark.sql.Column*) =
@@ -45,24 +46,13 @@ object GenData {
   /** uniform long in [0, n) from a seeded hash of `id` */
   private def u(seed: Int, n: Long) = pmod(h(seed, col("id")), lit(n))
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val sf = args(1).toDouble
-    val filesPerTable = if (args.length > 2) args(2).toInt else 1
+  def generate(spark: SparkSession, outDir: String, sf: Double, filesPerTable: Int): Unit = {
     require(filesPerTable >= 1, s"filesPerTable must be >= 1: $filesPerTable")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT64 micros, not INT96: day-boundary dates are exact either way
-      // and both Spark and DuckDB read micros identically (driver files
-      // use ms — the physical unit is irrelevant to the oracle compare
-      // since both engines read the SAME file)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // INT64 micros, not INT96: day-boundary dates are exact either way
+    // and both Spark and DuckDB read micros identically (driver files
+    // use ms — the physical unit is irrelevant to the oracle compare
+    // since both engines read the SAME file)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
 
     def n(base: Long): Long = math.max(1L, (base * sf).toLong)
@@ -225,7 +215,5 @@ object GenData {
       col("id").as("vec_id"),
       emb.as("embedding"),
       label.as("label")))
-
-    spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,17 +14,7 @@ object Verify {
       else if (args(2).startsWith("!")) {
         val ex = args(2).drop(1).split(",").toSet; name => !ex.contains(name)
       } else { val in = args(2).split(",").toSet; in.contains(_) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS) which Spark rejects by
-      // default; read as long nanos (Tables.events converts to micros).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => filter(name) }

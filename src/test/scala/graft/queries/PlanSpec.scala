@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.plans.PlanShape
 
 /** Physical-plan assertions: these lock in the properties that make the
   * queries survive a 100× scale-up — filters reaching the parquet scan,
@@ -350,8 +351,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q166: incremental dedup anti-joins digests only — document text never shuffles") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = Registry.queries("q166_incremental_dedup")(spark, dir)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("LeftAnti"), s"expected an anti join:\n$p")
@@ -360,13 +359,7 @@ class PlanSpec extends SparkSpec {
     // the projected output), not a leading-prefix string match, which a
     // secondary-key shuffle or a text column riding through an exchange's
     // output would slip past
-    def exchanges(plan: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
-      plan.collect {
-        case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-        case s: QueryStageExec => exchanges(s.plan)
-        case e: ShuffleExchangeExec => Seq(e)
-      }.flatten
-    val ex = exchanges(df.queryExecution.executedPlan)
+    val ex = PlanShape(df).shuffles
     assert(ex.nonEmpty, s"expected at least one shuffle in:\n$p")
     ex.foreach { e =>
       assert(!e.output.exists(_.name == "text"),
@@ -388,16 +381,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q170: line-df aggregate shuffles keys only; line bodies ride just the reassembly exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = Registry.queries("q170_line_dedup")(spark, dir)
-    def exchanges(plan: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
-      plan.collect {
-        case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-        case s: QueryStageExec => exchanges(s.plan)
-        case e: ShuffleExchangeExec => Seq(e)
-      }.flatten
-    val ex = exchanges(df.queryExecution.executedPlan)
+    val ex = PlanShape(df).shuffles
     assert(ex.nonEmpty)
     // the df-count exchange partitions on the md5 key __k: it must not
     // carry the line text. The one exchange allowed to carry lines is the
@@ -414,8 +399,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q178: dsir scans documents once at runtime; text never rides an exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = Registry.queries("q178_dsir_weights")(spark, dir)
     // the totals aggregate consumes the SAME tf exchange as the window
     // path — AQE stage reuse dedupes the identical subtrees at runtime,
@@ -430,21 +413,13 @@ class PlanSpec extends SparkSpec {
     assert(scans == 1, s"expected exactly one runtime scan of documents, saw $scans:\n$p")
     assert(p.contains("ReusedExchange"),
       s"totals aggregate does not reuse the tf exchange:\n$p")
-    def exchanges(plan: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
-      plan.collect {
-        case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-        case s: QueryStageExec => exchanges(s.plan)
-        case e: ShuffleExchangeExec => Seq(e)
-      }.flatten
-    exchanges(df.queryExecution.executedPlan).foreach { e =>
+    PlanShape(df).shuffles.foreach { e =>
       assert(!e.output.exists(_.name == "text"),
         s"document bodies ride through an exchange:\n$e")
     }
   }
 
   test("q179: interpolated LM scans documents once at runtime; text never rides an exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = Registry.queries("q179_interpolated_nll")(spark, dir)
     // all three model lookups are window sums over the one bigram pass;
     // the U-total aggregate reuses the first window's exchange at runtime
@@ -455,21 +430,13 @@ class PlanSpec extends SparkSpec {
     assert(scans == 1, s"expected exactly one runtime scan of documents, saw $scans:\n$p")
     assert(p.contains("ReusedExchange"),
       s"U-total aggregate does not reuse the bigram exchange:\n$p")
-    def exchanges(plan: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
-      plan.collect {
-        case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-        case s: QueryStageExec => exchanges(s.plan)
-        case e: ShuffleExchangeExec => Seq(e)
-      }.flatten
-    exchanges(df.queryExecution.executedPlan).foreach { e =>
+    PlanShape(df).shuffles.foreach { e =>
       assert(!e.output.exists(_.name == "text"),
         s"document bodies ride through an exchange:\n$e")
     }
   }
 
   test("q184: NB classifier scans documents once at runtime; text never rides an exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = Registry.queries("q184_nb_quality_llr")(spark, dir)
     // both class counts are window sums over the one token pass; the
     // class-totals aggregate reuses the groupBy exchange at runtime
@@ -480,37 +447,22 @@ class PlanSpec extends SparkSpec {
     assert(scans == 1, s"expected exactly one runtime scan of documents, saw $scans:\n$p")
     assert(p.contains("ReusedExchange"),
       s"class-totals aggregate does not reuse the token exchange:\n$p")
-    def exchanges(plan: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
-      plan.collect {
-        case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-        case s: QueryStageExec => exchanges(s.plan)
-        case e: ShuffleExchangeExec => Seq(e)
-      }.flatten
-    exchanges(df.queryExecution.executedPlan).foreach { e =>
+    PlanShape(df).shuffles.foreach { e =>
       assert(!e.output.exists(_.name == "text"),
         s"document bodies ride through an exchange:\n$e")
     }
   }
 
   test("q197/q198/q199: skew-safe twins plan NO window operator — the model attach is a splittable join") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.window.WindowExec
-    def flatten(plan: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
-      plan.collect {
-        case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-        case s: QueryStageExec => flatten(s.plan)
-        case p => Seq(p)
-      }.flatten
     for (name <- Seq("q197_nb_llr_skew_safe", "q198_interp_nll_skew_safe",
                      "q199_dsir_skew_safe")) {
       val df = Registry.queries(name)(spark, dir)
       df.collect()
-      val ops = flatten(df.queryExecution.executedPlan)
+      val shape = PlanShape(df)
       // the whole point of the twin: a WindowExec group can never be
       // split across tasks, so the hottest token serializes one task at
       // corpus scale — the twin must attach model counts via joins only
-      assert(!ops.exists(_.isInstanceOf[WindowExec]),
+      assert(shape.windows.isEmpty,
         s"$name plans a WindowExec — the skew-safe twin regressed to the window layout")
       // still one corpus scan: model build and probe sit above the same
       // (doc, token) aggregate exchange
@@ -518,7 +470,7 @@ class PlanSpec extends SparkSpec {
       val scans = p.split("\n").count(l => l.contains("FileScan parquet") && l.contains("documents"))
       assert(scans == 1, s"$name: expected one runtime scan of documents, saw $scans:\n$p")
       // and text still never shuffles
-      ops.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
+      shape.shuffles.foreach { e =>
         assert(!e.output.exists(_.name == "text"),
           s"$name: document bodies ride through an exchange:\n$e")
       }
@@ -533,8 +485,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q182: duplicate spans scan documents once; no self-join; text never rides an exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = Registry.queries("q182_duplicate_spans")(spark, dir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
@@ -544,13 +494,7 @@ class PlanSpec extends SparkSpec {
     // duplicated-ness is a window count over the gram partition of the
     // same pass — a postings SELF-JOIN here would be the df² fan-out
     assert(!p.contains("Join"), s"duplicate flag must not be a join:\n$p")
-    def exchanges(plan: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
-      plan.collect {
-        case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-        case s: QueryStageExec => exchanges(s.plan)
-        case e: ShuffleExchangeExec => Seq(e)
-      }.flatten
-    exchanges(df.queryExecution.executedPlan).foreach { e =>
+    PlanShape(df).shuffles.foreach { e =>
       assert(!e.output.exists(_.name == "text"),
         s"document bodies ride through an exchange:\n$e")
     }

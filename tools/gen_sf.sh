@@ -9,6 +9,6 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT="$1"; SF="$2"
 
-sbt -batch "runMain graft.GenData $OUT $SF"
+sbt -batch "runMain graft.Tool gen $OUT $SF"
 
 ls -la "$OUT"

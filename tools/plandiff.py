@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
-"""Diff two graft.Plans dumps (formatted physical plans per bench query)
-by plan SHAPE, not text: per query, count the physical operators that
-determine scale behavior — join strategies, exchanges, sorts, scans,
+"""Diff two `graft.Tool plans` directories (one formatted physical plan
+per query, `<query>.txt`) by plan SHAPE, not text: per query, count the
+physical operators that determine scale behavior — join strategies, exchanges, sorts, scans,
 whole-stage-codegen spans — and report queries whose shape changed
 between the two scale factors (broadcast->SMJ flips, extra exchanges,
 lost pushdown).
 
-Usage: python3 tools/plandiff.py <plans_a.txt> <plans_b.txt>
+Usage: python3 tools/plandiff.py <plansDirA> <plansDirB>
 Exit 0 always (informational); the human reads the diff.
 """
-import sys, re, collections
+import collections, pathlib, re, sys
 
 OPS = [
     "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
@@ -20,17 +20,9 @@ OPS = [
 ]
 
 def parse(path):
-    plans = {}
-    name = None
-    for line in open(path):
-        if line.startswith("==== "):
-            name = line[5:].strip()
-            plans[name] = []
-        elif name:
-            plans[name].append(line)
+    plans = {f.stem: f.read_text() for f in sorted(pathlib.Path(path).glob("*.txt"))}
     out = {}
-    for name, lines in plans.items():
-        text = "".join(lines)
+    for name, text in plans.items():
         sig = collections.OrderedDict()
         for op in OPS:
             # BroadcastExchange lines also contain "Exchange"; count plain

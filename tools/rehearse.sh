@@ -72,9 +72,9 @@ else
 fi
 
 echo "== plan dumps (sf0.1 baseline vs sf$SF) =="
-sbt -batch "runMain graft.Plans /root/testdata/sf0.1 $WORK/plans_sf01.txt" \
-           "runMain graft.Plans $DATA $WORK/plans_sf$SF.txt"
-python3 tools/plandiff.py "$WORK/plans_sf01.txt" "$WORK/plans_sf$SF.txt" \
+sbt -batch "runMain graft.Tool plans /root/testdata/sf0.1 $WORK/plans_sf01" \
+           "runMain graft.Tool plans $DATA $WORK/plans_sf$SF"
+python3 tools/plandiff.py "$WORK/plans_sf01" "$WORK/plans_sf$SF" \
   | tee "$WORK/plandiff.txt"
 
 echo "== bench @ sf$SF =="
