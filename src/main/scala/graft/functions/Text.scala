@@ -4,17 +4,20 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis column functions for large-scale training-data pipelines:
-  * tokenization, quality scoring, language ID, fingerprinting. All pure
-  * builtin-function compositions — codegen-friendly, no UDFs, so a 100 TB
-  * document scan stays in whole-stage codegen with the parquet reader
-  * pruning to the `text` column only.
+  * tokenization, quality scoring, language ID, fingerprinting. Builtin
+  * functions and the native `TextKernels` expressions — codegen-friendly,
+  * no UDFs, so a 100 TB document scan stays in whole-stage codegen with
+  * the parquet reader pruning to the `text` column only.
   */
 object Text {
 
-  /** Lowercased alphanumeric tokens. ASCII-scoped regex keeps Spark (Java
-    * regex) and DuckDB (RE2) semantics identical for oracle parity. */
-  def tokens(text: Column): Column =
-    regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
+  /** Lowercased alphanumeric tokens: the maximal `[a-z0-9]+` runs of
+    * lower(text), in order — the same array as
+    * `regexp_extract_all(lower(text), '[a-z0-9]+')` and its DuckDB mirror
+    * [[tokensSql]]. The ASCII-scoped alphabet keeps Spark and DuckDB (RE2)
+    * semantics identical for oracle parity. One native byte scan
+    * (`TextKernels.Shingles`), no regex. */
+  def tokens(text: Column): Column = TextKernels.shinglesCol(text, 1)
 
   /** One-pass native kernel (`TextKernels.TokenCount`), value-identical
     * to `size(tokens(text))` but allocation-free — token counting is on
@@ -38,24 +41,13 @@ object Text {
     words + symbols
   }
 
-  /** Word-level n-gram shingles (the MinHash/Jaccard input).
-    *
-    * Built by zipping the token array with its own shifted slices —
-    * `zip_with` pads the shorter side with nulls, `concat` propagates
-    * them, and one final filter drops the ragged tail. Crucially every
-    * reference to the token array sits at row level, NOT inside a lambda
-    * body: an expression referenced inside a higher-order-function lambda
-    * is re-evaluated per element, which turns the regex tokenizer into
-    * O(tokens²) per document (measured 10×+ slowdown on real corpora). */
-  def shingles(text: Column, n: Int): Column = {
-    require(n >= 1)
-    val t = tokens(text)
-    val joined = (2 to n).foldLeft(t) { (acc, i) =>
-      val shifted = slice(t, lit(i), greatest(size(t) - (i - 1), lit(0)))
-      zip_with(acc, shifted, (x, y) => concat(x, lit(" "), y))
-    }
-    if (n == 1) t else filter(joined, s => s.isNotNull)
-  }
+  /** Word-level n-gram shingles (the MinHash/Jaccard input): each run of
+    * n consecutive tokens joined by single spaces, in order, duplicates
+    * kept; empty for a text with fewer than n tokens, null for null. One
+    * native scan (`TextKernels.Shingles`) that cuts the n-grams out of one
+    * packed token buffer: no regex, and no `zip_with`/`filter` lambdas for
+    * Spark to interpret per row. n = 1 is [[tokens]]. */
+  def shingles(text: Column, n: Int): Column = TextKernels.shinglesCol(text, n)
 
   /** Shannon entropy (nats) of the ALPHANUMERIC character distribution —
     * the compressibility proxy quality filters use against keyboard-mash
@@ -73,8 +65,8 @@ object Text {
     * the HOF formulation ([[charEntropyHof]], kept as the spec'd
     * cross-check) references the extracted char array inside its
     * lambdas, which re-evaluates the regex once per DISTINCT character —
-    * the Text.shingles O(n²)-class trap, ~37× the scan cost, caught by
-    * the round-8 sf10 rehearsal. */
+    * an O(n²)-class trap, ~37× the scan cost, caught by the round-8 sf10
+    * rehearsal. */
   def charEntropy(text: Column): Column = TextKernels.charEntropyCol(text)
 
   /** Pure-column twin of [[charEntropy]] — value-identical (same grid,
@@ -102,33 +94,33 @@ object Text {
       .otherwise(lit(0.0))
   }
 
+  /** `x / (token count)` in double; null for a text with no token, where
+    * an ANSI-mode division would throw (DuckDB's mirrors give NULL). */
+  private def perToken(x: Column, text: Column): Column =
+    x.cast("double") / nullif(tokenCount(text), lit(0))
+
   /** Type-token ratio: distinct/total tokens (lexical diversity). */
-  def typeTokenRatio(text: Column): Column =
-    distinctTokenCount(text).cast("double") / tokenCount(text)
+  def typeTokenRatio(text: Column): Column = perToken(distinctTokenCount(text), text)
 
   /** Fraction of tokens belonging to a stopword list. */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val t = tokens(text)
-    size(filter(t, w => w.isInCollection(stopwords))).cast("double") / size(t)
-  }
+  def stopwordRatio(text: Column, stopwords: Seq[String]): Column =
+    perToken(size(filter(tokens(text), w => w.isInCollection(stopwords))), text)
 
   /** Mean token length in characters. */
   def meanTokenLength(text: Column): Column =
-    aggregate(tokens(text), lit(0L), (acc, w) => acc + length(w)).cast("double") /
-      tokenCount(text)
+    perToken(aggregate(tokens(text), lit(0L), (acc, w) => acc + length(w)), text)
 
   val EnglishStopwords: Seq[String] =
     Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")
 
   /** Composite quality score in [0,1]: length saturation + lexical
     * diversity + stopword plausibility — the shape of heuristic quality
-    * filters used for pretraining-corpus curation. */
-  def qualityScore(text: Column): Column = {
-    val nTok = tokenCount(text).cast("double")
-    lit(0.5) * least(lit(1.0), nTok / 100.0) +
-      lit(0.3) * typeTokenRatio(text) +
-      lit(0.2) * stopwordRatio(text, EnglishStopwords)
-  }
+    * filters used for pretraining-corpus curation:
+    * `0.5·min(1, n/100) + 0.3·typeTokenRatio + 0.2·stopwordRatio` over
+    * [[EnglishStopwords]]; null for a text with no token. One native pass
+    * per document (`TextKernels.QualityScore`), bit-identical to that
+    * column arithmetic and to [[qualityScoreSql]]. */
+  def qualityScore(text: Column): Column = TextKernels.qualityScoreCol(text)
 
   /** Per-language ASCII stopword profiles for the n-gram language-ID
     * heuristic. Tiny on purpose: a real deployment broadcasts a bigger

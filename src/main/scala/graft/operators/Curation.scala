@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Rand, Seeds, Text, TopK}
+import graft.functions.{GopherRules, Rand, Seeds, Text, TextKernels, TopK}
 
 /** Corpus-curation operators for training-data pipelines: benchmark
   * decontamination, boilerplate n-gram mining, repetition scoring, and
@@ -210,36 +210,22 @@ object Curation {
     * maxSymbolRatio; `stopword_hits` below minStopwordHits;
     * `dup_gram_frac` (1 − distinct/total word n-grams) above
     * maxDupGramFrac. Length-derived rules pass vacuously on empty docs —
-    * `word_count` is the rule that fails there. Returns
-    * (idCol, n_tok, failed_rules comma-joined in the fixed order above,
-    * passes). */
+    * `word_count` is the rule that fails there; a null text fails no rule
+    * and has a null `n_tok`. Returns (idCol, n_tok, failed_rules
+    * comma-joined in the fixed order above, passes). All five rules come
+    * from one native pass per document (`TextKernels.GopherFailedRules`),
+    * so the `passes` filter costs one scan of the text even where Catalyst
+    * copies it into the scan's filter. */
   def gopherRules(docs: DataFrame,
                   minWords: Int = 50, maxWords: Int = 100000,
                   minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                   maxSymbolRatio: Double = 0.1, minStopwordHits: Int = 2,
                   maxDupGramFrac: Double = 0.2, dupGramN: Int = 2,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import graft.functions.Text
-    val toks = Text.tokens(col(textCol))
-    val n = size(toks)
-    val meanLen = Text.meanTokenLength(col(textCol))
-    val symbols = length(regexp_replace(lower(col(textCol)),
-      "[a-z0-9 \\t\\n\\x0B\\f\\r]", ""))
-    val stops = size(filter(toks, w => w.isInCollection(Text.EnglishStopwords)))
-    val sh = Text.shingles(col(textCol), dupGramN)
-    val (gt, gd) = (size(sh), size(array_distinct(sh)))
-    val failed = Seq(
-      when(n < minWords || n > maxWords, lit("word_count")),
-      when(n > 0 && (meanLen < minMeanLen || meanLen > maxMeanLen),
-        lit("mean_word_length")),
-      when(n > 0 && symbols.cast("double") / n.cast("double") > maxSymbolRatio,
-        lit("symbol_ratio")),
-      when(stops < minStopwordHits, lit("stopword_hits")),
-      when(gt > 0 &&
-        (gt - gd).cast("double") / gt.cast("double") > maxDupGramFrac,
-        lit("dup_gram_frac")))
-    docs.select(col(idCol), n.cast("long").as("n_tok"),
-      concat_ws(",", failed: _*).as("failed_rules"))
+    val rules = GopherRules(minWords, maxWords, minMeanLen, maxMeanLen,
+      maxSymbolRatio, minStopwordHits, maxDupGramFrac, dupGramN)
+    docs.select(col(idCol), Text.tokenCount(col(textCol)).cast("long").as("n_tok"),
+      TextKernels.gopherFailedRulesCol(col(textCol), rules).as("failed_rules"))
       .withColumn("passes", col("failed_rules") === "")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.functions.{Seeds, Text}
 
@@ -103,14 +103,6 @@ object Dedup {
                                id: String = "doc_id", text: String = "text",
                                shingleN: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
                                threshold: Double = 0.8, maxBucket: Long = 0L): DedupRun = {
-    val dp = batch.sparkSession.sparkContext.defaultParallelism
-    def shingled(df: DataFrame) = df
-      .repartition(dp)
-      .select(col(id).as("__id"),
-        array_distinct(Text.shingles(col(text), shingleN)).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .withColumn("__bh", transform(col("__sh"), s => xxhash64(s)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def banded(sh: DataFrame) = {
       val all = sh
         .withColumn("__mh", minhashes(col("__bh"), k))
@@ -122,8 +114,8 @@ object Dedup {
         all.join(broadcast(hot), Seq("__band"), "left_anti")
       }
     }
-    val bsh = shingled(batch)
-    val csh = shingled(corpus)
+    val (bCache, bsh) = shingleHashes(batch, id, text, shingleN)
+    val (cCache, csh) = shingleHashes(corpus, id, text, shingleN)
     val bb = banded(bsh)
     val cb = banded(csh)
 
@@ -148,7 +140,7 @@ object Dedup {
     val kept = batch.select(col(id))
       .join(hitCorpus, Seq(id), "left_anti")
       .join(dominated, Seq(id), "left_anti")
-    new DedupRun(kept, Seq(bsh, csh))
+    new DedupRun(kept, Seq(bCache, cCache))
   }
 
   /** Exact-dedup projection: keep only the representative row per content
@@ -157,6 +149,35 @@ object Dedup {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(digest(col(text))).orderBy(col(id))
     docs.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** `(cache, shingled)`: `cache` holds (`__id`, `__bh` = one xxhash64 per
+    * distinct `shingleN`-gram) for every document; `shingled` is its rows
+    * with at least one shingle.
+    *
+    * The round-robin repartition spreads the per-document tokenizing and
+    * hashing over every core: a compact parquet input (one row group)
+    * would otherwise pin the whole corpus to one task. The table is read
+    * by several plan branches (banding and both verify sides), so it is
+    * persisted and shingling runs once per document, not once per
+    * consumer. MEMORY_AND_DISK: at corpus scale the table spills instead
+    * of recomputing (same choice as Spark ML's MinHashLSHModel); in a
+    * staged pipeline, checkpoint via `Pipeline.stage` instead and drop
+    * this cache. It lives until `DedupRun.unpersistCaches` (or
+    * catalog.clearCache(), which Bench and Verify run per query).
+    *
+    * The empty-set filter sits above the cache on purpose: below it,
+    * Catalyst pushes the filter under the repartition, and every document
+    * is shingled twice — once in the filter on the input's partitions,
+    * once in the projection after the exchange. */
+  private def shingleHashes(docs: DataFrame, id: String, text: String,
+                            shingleN: Int): (DataFrame, DataFrame) = {
+    val cache = docs
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      .select(col(id).as("__id"), transform(
+        array_distinct(Text.shingles(col(text), shingleN)), s => xxhash64(s)).as("__bh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (cache, cache.filter(size(col("__bh")) > 0))
   }
 
   /** k deterministic minhash values from a PRE-HASHED shingle array
@@ -227,26 +248,9 @@ object Dedup {
   def minhashLshRun(docs: DataFrame, id: String = "doc_id", text: String = "text",
                     shingleN: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
                     threshold: Double = 0.8, maxBucket: Long = 0L): DedupRun = {
-    // 1. shingle sets + one base hash per shingle (hashed once, reused k×).
-    //    Repartition first: tokenization/hashing is CPU-bound per doc, and a
-    //    compact parquet input (one row group) would otherwise pin the whole
-    //    corpus to one task regardless of cores.
-    //    The hash table is consumed 3× in this plan (banding + both verify
-    //    sides) — persist it so shingling/hashing runs once per document,
-    //    not once per consumer. MEMORY_AND_DISK: at corpus scale the table
-    //    spills instead of recomputing (same choice as Spark ML's
-    //    MinHashLSHModel); in a staged pipeline, checkpoint via
-    //    `Pipeline.stage` instead and drop this cache. The cache lives
-    //    until `DedupRun.unpersistCaches` (or catalog.clearCache(), which
-    //    Bench and Verify run per query).
-    val sh = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .select(
-        col(id).as("__id"),
-        array_distinct(Text.shingles(col(text), shingleN)).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .withColumn("__bh", transform(col("__sh"), s => xxhash64(s)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // 1. one base hash per distinct shingle (hashed once, reused k×),
+    //    persisted: see shingleHashes
+    val (cache, sh) = shingleHashes(docs, id, text, shingleN)
     // 2. band keys only — signatures and shingles do NOT ride the explode
     val allBands = sh
       .withColumn("__mh", minhashes(col("__bh"), k))
@@ -277,7 +281,7 @@ object Dedup {
     val pairs = candidates.join(shA, "id_a").join(shB, "id_b")
       .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jac"))
       .filter(col("jac") >= threshold)
-    new DedupRun(pairs, Seq(sh))
+    new DedupRun(pairs, Seq(cache))
   }
 
   /** 64-bit SimHash of a token-hash array: per-bit majority vote over the
@@ -326,17 +330,20 @@ object Dedup {
                  portable: Boolean = false): DedupRun = {
     val tokenHash: Column => Column =
       if (portable) Seeds.portableHash64 else (t => xxhash64(t))
-    // token hashes materialized once; the 64 bit-folds then reuse them
-    // persist: the 64-bit-fold signature is consumed by both join sides;
-    // without the cache it is computed twice per document. Released by
+    // one signature per document, persisted: both join sides read it, and
+    // without the cache it is computed twice per document. Documents with
+    // no token get a null signature, dropped ABOVE the cache — a filter
+    // below it would be pushed under the repartition and tokenize every
+    // document twice (see shingleHashes). Released by
     // DedupRun.unpersistCaches / the harnesses' per-query clearCache().
-    val sigs = docs
+    val cache = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select((blockCols.map(col) :+ col(id).as("__id") :+
         transform(Text.tokens(col(text)), tokenHash).as("__th")): _*)
-      .filter(size(col("__th")) > 0)
-      .withColumn("__sig", simhashFromHashes(col("__th"))).drop("__th")
+      .withColumn("__sig", when(size(col("__th")) > 0, simhashFromHashes(col("__th"))))
+      .drop("__th")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = cache.filter(col("__sig").isNotNull)
     // signatures are 8 bytes — carry them through the chunk explode rather
     // than re-joining (which would recompute the 64-fold signature once per
     // join consumer); distinct dedups pairs sharing several chunks. Block
@@ -352,7 +359,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"), hamming(col("sig_a"), col("sig_b")).as("dist"))
       .filter(col("dist") <= maxHamming)
       .distinct()
-    new DedupRun(pairs, Seq(sigs))
+    new DedupRun(pairs, Seq(cache))
   }
 
   /** Hamming near-dup pairs for ANY precomputed 64-bit signature table —
@@ -433,13 +440,15 @@ object Dedup {
     while (changed > 0 && it < maxIters) {
       val neighborMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min("component").as("nmin"))
-      val next = labels.join(neighborMin, labels("id") === col("src"), "left")
+      // a label changes iff a neighbor's is smaller; the round counts its
+      // changes while it runs, so each round is one execution
+      val round = new Observation()
+      labels = labels.join(neighborMin, labels("id") === col("src"), "left")
+        .observe(round, count(when(col("nmin") < col("component"), lit(1))).as("changed"))
         .select(labels("id"),
           least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
         .localCheckpoint()
-      changed = next.join(labels.withColumnRenamed("component", "old"), "id")
-        .filter(col("component") =!= col("old")).count()
-      labels = next
+      changed = round.get("changed").asInstanceOf[Long]
       it += 1
     }
     edges.unpersist()

@@ -41,6 +41,45 @@ object KernelProperties extends Properties("HashKernels") {
     }
 }
 
+/** The text kernels against a plain-JVM reference: `java.util.regex` over
+  * the string Spark's `lower()` produces. */
+object TextKernelProperties extends Properties("TextKernels") {
+  import org.apache.spark.sql.catalyst.util.CollationAwareUTF8String
+  import org.apache.spark.sql.types.StringType
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private val text: Gen[String] = Gen.listOf(Gen.frequency(
+    8 -> Gen.alphaNumChar.map(_.toString),
+    3 -> Gen.oneOf(" ", "  ", "\t", "\n", ".", ", ", "!?", "-"),
+    2 -> Gen.oneOf("the", "and", "of", "It", "A"),
+    1 -> Gen.oneOf("\u00e9", "\u00c9", "\u00df", "\u03b8", "\u8a9e", "\u212A", "\u0130",
+      "\u0301", "\ud83d\ude00"))).map(_.mkString)
+
+  private def refTokens(s: String): Seq[String] =
+    "[a-z0-9]+".r.findAllIn(CollationAwareUTF8String.toLowerCase(UTF8String.fromString(s)).toString).toSeq
+
+  property("shingles(s, n) are the n-token windows of the regex tokens, space-joined") =
+    forAll(text, Gen.choose(1, 4)) { (s, n) =>
+      val got = TextKernels.shingles(UTF8String.fromString(s), n)
+        .toObjectArray(StringType).map(_.toString).toSeq
+      got == refTokens(s).sliding(n).filter(_.size == n).map(_.mkString(" ")).toSeq
+    }
+
+  property("tokenCount is the number of regex tokens") =
+    forAll(text) { s => TextKernels.tokenCount(UTF8String.fromString(s)) == refTokens(s).size }
+
+  property("qualityScore is null without tokens, else the formula bit for bit") =
+    forAll(text) { s =>
+      val t = refTokens(s)
+      val n = t.size.toDouble
+      val expected =
+        if (t.isEmpty) null
+        else java.lang.Double.valueOf(0.5 * math.min(1.0, n / 100.0) + 0.3 * (t.distinct.size / n) +
+          0.2 * (t.count(graft.functions.Text.EnglishStopwords.contains) / n))
+      TextKernels.qualityScore(UTF8String.fromString(s)) == expected
+    }
+}
+
 object SolveProperties extends Properties("Trainer.solve") {
 
   // diagonally dominant systems are well-conditioned and never singular

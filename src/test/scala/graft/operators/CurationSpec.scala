@@ -346,6 +346,15 @@ class CurationSpec extends SparkSpec {
     assert(out.values.count(_._2) === 1)
   }
 
+  test("gopherRules: a null text fails no rule and has a null n_tok") {
+    val s = spark
+    import s.implicits._
+    val d = Seq((1L, null: String), (2L, "")).toDF("doc_id", "text")
+    val out = Curation.gopherRules(d).orderBy("doc_id").collect()
+    assert(out(0).isNullAt(1) && out(0).getString(2) === "" && out(0).getBoolean(3))
+    assert(out(1).getLong(1) === 0L && !out(1).getBoolean(3))
+  }
+
   test("zipfFit recovers the exponent of a synthetic Zipf corpus; uniform is flat") {
     val s = spark
     import s.implicits._

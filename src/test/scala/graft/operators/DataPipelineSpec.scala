@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.functions.Text
 import org.apache.spark.sql.functions._
 
@@ -384,6 +385,29 @@ class DataPipelineSpec extends SparkSpec {
     val pairs = (1L to 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val comp = Dedup.components(pairs).collect().map(_.getLong(1)).distinct.toSeq
     assert(comp == Seq(1L))
+  }
+
+  test("components runs one SQL execution per round, plus the initial labels") {
+    val s = spark
+    import s.implicits._
+    // star 10-(11,12): round 1 relabels 11 and 12, round 2 changes nothing
+    val pairs = Seq((10L, 11L), (10L, 12L)).toDF("id_a", "id_b")
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+          if st.rootExecutionId.forall(_ == st.executionId) => n.incrementAndGet(): Unit
+        case _ =>
+      }
+    }
+    ColumnBridge.waitListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val labels =
+      try { val l = Dedup.components(pairs); ColumnBridge.waitListenerBusEmpty(spark.sparkContext); l }
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(n.get === 3)
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
   test("components throws instead of returning truncated labels") {

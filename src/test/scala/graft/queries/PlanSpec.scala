@@ -1,7 +1,10 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.functions.Shingles
 import graft.plans.PlanShape
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan assertions: these lock in the properties that make the
   * queries survive a 100× scale-up — filters reaching the parquet scan,
@@ -512,6 +515,26 @@ class PlanSpec extends SparkSpec {
     val p = proj.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange") && !p.contains("Join"),
       s"projection is not pure map-side column work:\n$p")
+  }
+
+  test("q36/q37: documents are tokenized once, above the round-robin exchange") {
+    // the empty-set filter must not be pushed under the repartition: there
+    // it re-runs the tokenizer on the input's partitions before the exchange
+    def tokenizes(p: SparkPlan) = p.expressions.exists(_.exists(_.isInstanceOf[Shingles]))
+    for (name <- Seq("q36_minhash_lsh", "q37_simhash")) {
+      val df = Registry.queries(name)(spark, dir)
+      df.collect()
+      val shape = PlanShape(df)
+      val roundRobin = shape.shuffles.filter(_.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
+      assert(roundRobin.nonEmpty, s"$name lost its round-robin repartition")
+      // the cached plan is listed once per scan of the cache: distinct nodes
+      assert(shape.all[SparkPlan].filter(tokenizes).distinct.size == 1,
+        s"$name does not tokenize in exactly one plan node")
+      roundRobin.foreach { e =>
+        assert(!PlanShape(e.child).all[SparkPlan].exists(tokenizes),
+          s"$name tokenizes below the round-robin exchange:\n$e")
+      }
+    }
   }
 
   test("whole-stage codegen covers the scan-filter-project pipeline") {
