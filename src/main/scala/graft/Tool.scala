@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.plans.PlanShape
 import graft.queries.Registry
 
@@ -25,7 +24,6 @@ object Tool {
       |  plans <sfDir> <outDir> [query,query,...]   formatted physical plan per query (default: bench set)
       |  audit <sfDir> <outFile>                    plan-shape TSV of every registry query
       |  scale <communities|ccsampled> <dataDir>    timed scale run of an all-pairs-oracle composite
-      |  skew [nDocs]                               window form vs skew-safe twin on a hot-token corpus
       |  gen <outDir> <sf> [filesPerTable]          synthetic fixtures (GenData)""".stripMargin
 
   def main(args: Array[String]): Unit = {
@@ -46,8 +44,6 @@ object Tool {
       case Seq("plans", sfDir, outDir, qs) => plans(_, sfDir, outDir, names(qs))
       case Seq("audit", sfDir, out) => audit(_, sfDir, out)
       case Seq("scale", what @ ("communities" | "ccsampled"), dir) => scale(_, what, dir)
-      case Seq("skew") => skew(_, 24000000L)
-      case Seq("skew", n) => skew(_, n.toLong)
       case Seq("gen", outDir, sf) => GenData.generate(_, outDir, sf.toDouble, 1)
       case Seq("gen", outDir, sf, files) => GenData.generate(_, outDir, sf.toDouble, files.toInt)
       case _ => throw new IllegalArgumentException(usage)
@@ -166,36 +162,5 @@ object Tool {
       val cc = graft.operators.Graph.clusteringCoefficientSampled(edges, samplesPerVertex = 16)
       report(cc.count(), cc)
     }
-  }
-
-  /** The skew-safe twin against the window form of `naiveBayesLlr` on a
-    * corpus where one token ("the") is in every document. The window form
-    * must hold that token's whole group in one task; the twin collapses it
-    * map-side and spreads the probe rows over a salted join key (explicit,
-    * because AQE's skew-join rule only matches joins of bare shuffle
-    * stages). Wall time on a shared host is noisy, so the witness is the
-    * longest task: on a large cluster a stage lasts as long as that task. */
-  private def skew(spark: SparkSession, n: Long): Unit = {
-    val metrics = new StageMetrics(spark.sparkContext)
-    // the other tokens spread over ~50k values, so only the hot group is large
-    val docs = spark.range(n).repartition(spark.sparkContext.defaultParallelism)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", lit("the"), concat(lit("w"), pmod(col("id"), lit(50021)))).as("text"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    docs.count() // build the fixture outside the measured runs
-    val target = pmod(col("doc_id"), lit(3)) === 0
-    val train = pmod(col("doc_id"), lit(5)) =!= 0
-    for (round <- 1 to 2; skewSafe <- Seq(false, true)) {
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val rows = graft.operators.Retrieval.naiveBayesLlr(docs, target, train, skewSafe = skewSafe).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val stages = metrics.stages()
-      val label = s"${if (skewSafe) "skewSafe" else "window"}#$round"
-      val maxTask = stages.map(_.maxTaskMs).maxOption.getOrElse(0L) / 1000.0
-      val perStage = stages.map(s => f"s${s.id}=${s.maxTaskMs / 1000.0}%.1f").mkString(" ")
-      println(f"[skew] $label%-12s wall=$sec%7.2f s  maxTask=$maxTask%7.2f s  ($rows rows, n=$n)  [$perStage]")
-    }
-    docs.unpersist()
   }
 }

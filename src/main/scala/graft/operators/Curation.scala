@@ -560,11 +560,12 @@ object Curation {
     * the target distribution; feed the output to [[weightedSample]] /
     * `TopK` for the actual resampling step.
     *
-    * Plan: ONE tokenize pass → (doc, dim) tf aggregate; per-dim counts
-    * piggyback as window sums over the dim partition of the SAME pass
-    * (the [[tfIdfTopK]] trick — no second corpus scan; the totals
-    * aggregate reuses the tf exchange), corpus totals broadcast as a
-    * one-row scalar, and the final weight is one doc-keyed aggregate.
+    * Plan: ONE tokenize pass → (doc, dim) tf aggregate; the per-dim
+    * model is a groupBy of that SAME pass (no second corpus scan: AQE
+    * reuses the tf exchange) and, at ≤ `dims` ≤ 65536 rows, broadcasts
+    * back with its one-row totals, so the probe side keeps its
+    * partitioning and the hot dim (where "the" lands) costs no one task
+    * more than the rest. The final weight is one doc-keyed aggregate.
     * Exchanges carry (doc, dim, tf) counts — document text never
     * shuffles.
     *
@@ -575,50 +576,31 @@ object Curation {
     * sum is order- and partition-free. Documents with zero tokens have
     * no feature rows and drop out (trivially unscoreable). */
   def dsirWeights(docs: DataFrame, target: Column, dims: Int = 4096,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  skewSafe: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     import org.apache.spark.sql.types.DecimalType
     require(dims >= 2 && dims <= 65536, "dims must be in [2, 65536]")
+    // concat_ws never returns null, so neither does the md5 chain: saying
+    // so keeps the join from inferring isnotnull(dim), which Catalyst
+    // pushes below the tf aggregate as a Filter re-running four md5
+    // digits per token (FilterExec has no common-subexpression reuse)
+    val dim = ColumnBridge.column(KnownNotNull(ColumnBridge.expression(
+      pmod(Rand.portableHexNum(0, col("__t")), lit(dims)).cast("int"))))
     val f = docs
       .select(col(idCol), target.as("__is_t"),
         explode(Text.tokens(col(textCol))).as("__t"))
-      .groupBy(col(idCol), col("__is_t"),
-        pmod(Rand.portableHexNum(0, col("__t")), lit(dims)).cast("int").as("dim"))
+      .groupBy(col(idCol), col("__is_t"), dim.as("dim"))
       .agg(count(lit(1)).as("tf"))
     val tgtTf = when(col("__is_t"), col("tf")).otherwise(0L)
     def lnP(c: Column, tot: Column): Column =
       round(log((c + 1).cast("double") / (tot + dims).cast("double")), 9)
         .cast(DecimalType(18, 9))
-    // skewSafe: at 10⁹⁺ documents the hashed dim the hottest token lands
-    // in forms one ~|corpus|-row WINDOW group that a single task must
-    // buffer (WindowExec cannot split a group). The twin aggregates the
-    // per-dim model with groupBy — map-side combine collapses the hot
-    // dim — and, because the model is ≤ `dims` ≤ 65536 rows of three
-    // longs, broadcasts it back: the probe side keeps its partitioning,
-    // so the hot dim costs NOTHING downstream. Value-identical (exact
-    // long counts; spec-pinned, q199 vs q178's oracle).
-    val scored =
-      if (skewSafe) {
-        // explicit isNotNull (vacuously true): the join infers it on both
-        // children; without it the totals path sits above a structurally
-        // different subtree and exchange reuse breaks (second corpus scan)
-        val ff = f.filter(col("dim").isNotNull)
-        val model = ff.groupBy(col("dim"))
-          .agg(sum(col("tf")).as("__c_r"), sum(tgtTf).as("__c_t"))
-        val tot = model.agg(
-          sum("__c_r").as("__tot_r"), sum("__c_t").as("__tot_t"))
-        ff.join(broadcast(model), Seq("dim"))
-          .crossJoin(broadcast(tot))
-      } else {
-        val tot = f.agg(
-          sum(col("tf")).as("__tot_r"),
-          sum(tgtTf).as("__tot_t"))
-        f.withColumn("__c_r", sum(col("tf")).over(Window.partitionBy("dim")))
-          .withColumn("__c_t", sum(tgtTf).over(Window.partitionBy("dim")))
-          .crossJoin(broadcast(tot))
-      }
-    scored
+    val model = f.groupBy(col("dim"))
+      .agg(sum(col("tf")).as("__c_r"), sum(tgtTf).as("__c_t"))
+    val tot = model.agg(sum("__c_r").as("__tot_r"), sum("__c_t").as("__tot_t"))
+    f.join(broadcast(model), Seq("dim"))
+      .crossJoin(broadcast(tot))
       .withColumn("__lr",
         lnP(col("__c_t"), col("__tot_t")) - lnP(col("__c_r"), col("__tot_r")))
       .groupBy(col(idCol))

@@ -130,22 +130,20 @@ object Retrieval {
     *
     * Plan: ONE bigram explode; all three reference-count lookups attach
     * as window sums over (bigram / context / continuation) partitions of
-    * the SAME pass — the [[graft.operators.Curation.dsirWeights]] trick,
+    * the SAME pass — the [[graft.operators.Curation.tfIdfTopK]] trick,
     * no model-table joins, no second corpus scan (the U-total aggregate
     * reuses the first window's exchange). Exchanges carry gram-shaped
     * rows; document text never shuffles. Returns (idCol, n_bigram, xent)
-    * for documents with ≥ 2 tokens.
+    * for documents with ≥ 2 tokens. The hottest context ("the" as w₁)
+    * is the same one-task window group as [[naiveBayesLlr]]'s hot token.
     *
     * Determinism: all probabilities are ratios/affine combinations of
     * exact integers — per-op IEEE, bit-identical cross-engine; ln rounds
     * to 1e-9 before the exact decimal mean (the q98 libm class). */
   def interpolatedBigramNll(docs: DataFrame, ref: Column, lambda: Double = 0.7,
-                            idCol: String = "doc_id", textCol: String = "text",
-                            skewSafe: Boolean = false, saltFactor: Int = 64): DataFrame = {
+                            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(lambda > 0 && lambda < 1, s"lambda must be in (0,1): $lambda")
-    require(saltFactor >= 1 && saltFactor <= 4096,
-      s"saltFactor must be in [1, 4096]: $saltFactor")
     // pre-aggregate per-document bigram multiplicities FIRST: the windows
     // see (doc, bigram)-distinct rows instead of the raw stream, and —
     // the part that makes the plan single-scan — both downstream
@@ -161,40 +159,11 @@ object Retrieval {
       .groupBy(col(idCol), col("__ref"), col("__b"), col("__w1"), col("__w2"))
       .agg(count(lit(1)).as("__tf"))
     val refTf = when(col("__ref"), col("__tf")).otherwise(0L)
-    // skewSafe: the three reference-count attachments become groupBy
-    // model tables joined back SALTED instead of window sums — the
-    // hottest context ("the" as w₁) otherwise forms one ~|corpus|-row
-    // window group a single task must buffer (see [[naiveBayesLlr]] for
-    // the full rationale incl. why explicit salting, not AQE; identical
-    // trade, spec-pinned value-identity, q198 vs q179's oracle). All
-    // four consumers still sit above the identical (doc, bigram)
-    // aggregate exchange — one corpus scan either way. ONE probe salt
-    // serves all three joins.
-    val (bis, total) =
-      if (skewSafe) {
-        // explicit isNotNulls for exchange reuse — see [[naiveBayesLlr]]
-        val gf = g.filter(col("__b").isNotNull &&
-          col("__w1").isNotNull && col("__w2").isNotNull)
-        val bModel = gf.groupBy(col("__b")).agg(sum(refTf).as("__bc"))
-        val cModel = gf.groupBy(col("__w1")).agg(sum(refTf).as("__cc"))
-        val uModel = gf.groupBy(col("__w2")).agg(sum(refTf).as("__uc"))
-        def salted(m: DataFrame) = m.withColumn("__salt",
-          explode(sequence(lit(0), lit(saltFactor - 1))))
-        // non-nullable salt — see [[naiveBayesLlr]] (exchange reuse + null id)
-        val probe = gf.withColumn("__salt",
-          coalesce(pmod(xxhash64(col(idCol)), lit(saltFactor)), lit(0L)).cast("int"))
-        // shuffle_hash build on the salted model sides — see [[naiveBayesLlr]]
-        (probe.join(salted(bModel).hint("shuffle_hash"), Seq("__b", "__salt"))
-          .join(salted(cModel).hint("shuffle_hash"), Seq("__w1", "__salt"))
-          .join(salted(uModel).hint("shuffle_hash"), Seq("__w2", "__salt")),
-          // Σ context counts ≡ Σ refTf: exact longs, vocab-width input
-          cModel.agg(sum("__cc").as("__u")))
-      } else {
-        (g.withColumn("__bc", sum(refTf).over(Window.partitionBy("__b")))
-          .withColumn("__cc", sum(refTf).over(Window.partitionBy("__w1")))
-          .withColumn("__uc", sum(refTf).over(Window.partitionBy("__w2"))),
-          g.agg(sum(refTf).as("__u")))
-      }
+    val bis = g
+      .withColumn("__bc", sum(refTf).over(Window.partitionBy("__b")))
+      .withColumn("__cc", sum(refTf).over(Window.partitionBy("__w1")))
+      .withColumn("__uc", sum(refTf).over(Window.partitionBy("__w2")))
+    val total = g.agg(sum(refTf).as("__u"))
     val pBig = when(col("__cc") > 0,
       col("__bc").cast("double") / col("__cc").cast("double")).otherwise(lit(0.0))
     val pUni = (col("__uc") + 1).cast("double") /
@@ -236,36 +205,13 @@ object Retrieval {
     * class). Totals fit 2^53 comfortably through petabyte-scale token
     * counts (2^53 ≈ 9·10¹⁵ tokens).
     *
-    * `skewSafe = true` is the corpus-scale layout: a window group cannot
-    * be split across tasks, so the hottest token ("the" — present in
-    * essentially every document) forms ONE window group of ~|documents|
-    * rows that a single task must buffer and spill, serializing the
-    * stage at 10⁹⁺ documents even though total work is linear. The twin
-    * builds the class counts as a `groupBy(token)` model table instead
-    * (map-side partial aggregation collapses the hot key to one row per
-    * partition) and joins it back SALTED: the model replicates ×
-    * `saltFactor` with a salt column, the probe side tags
-    * `pmod(xxhash64(doc_id), saltFactor)`, and the join key becomes
-    * (token, salt) — the hot token's probe rows spread across
-    * `saltFactor` partitions BY CONSTRUCTION, as does the fused
-    * partial-agg of the final per-document sum. The salting is explicit
-    * and deterministic rather than delegated to AQE because AQE's
-    * OptimizeSkewedJoin only pattern-matches joins whose children are
-    * bare shuffle stages — the model's final aggregate sits between its
-    * exchange and this join, so the rule never fires here (measured:
-    * on a one-token-everywhere fixture the unsalted join re-serialized
-    * the hot partition, 24 s in one task at 24 M docs; see SCALE.md).
-    * Both consumers sit above the identical (doc, token) aggregate
-    * exchange, so the corpus still tokenizes once; counts are exact
-    * longs either way and the salt never reaches an aggregate, so the
-    * two layouts are value-identical (spec-pinned, and q197 runs the
-    * twin against q184's oracle). Default stays the window form — the
-    * single-scan plan the sf-test oracles mirror. */
+    * The hottest token ("the") forms one window group of ~|documents|
+    * rows that a single task buffers. The window stays because a salted
+    * model-table join that spreads that group measured slower, even on a
+    * one-token-everywhere corpus of 4·10⁶ documents (SCALE.md, "one
+    * layout per scoring operator"). */
   def naiveBayesLlr(docs: DataFrame, target: Column, train: Column,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    skewSafe: Boolean = false, saltFactor: Int = 64): DataFrame = {
-    require(saltFactor >= 1 && saltFactor <= 4096,
-      s"saltFactor must be in [1, 4096]: $saltFactor")
+                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = docs
       .select(col(idCol), target.as("__y"), train.as("__tr"),
@@ -274,42 +220,11 @@ object Retrieval {
       .agg(count(lit(1)).as("__tf"))
     val posTf = when(col("__tr") && col("__y"), col("__tf")).otherwise(0L)
     val negTf = when(col("__tr") && !col("__y"), col("__tf")).otherwise(0L)
-    val (withCounts, totals) =
-      if (skewSafe) {
-        // explicit isNotNull (vacuously true — explode never yields null
-        // tokens): the join infers this constraint on both children, and
-        // without it the totals path sits above a DIFFERENT subtree than
-        // the join paths (no inferred filter), breaking exchange reuse
-        // and scanning the corpus twice
-        val gf = g.filter(col("__t").isNotNull)
-        val model = gf.groupBy(col("__t"))
-          .agg(sum(posTf).as("__np"), sum(negTf).as("__nn"))
-        // deterministic salt (see scaladoc): model ×saltFactor (vocab-
-        // width — the replication is noise next to the corpus), probe
-        // tagged by doc hash; the (token, salt) join key splits the hot
-        // token saltFactor ways. shuffle_hash with the salted model as
-        // build keeps the corpus side streaming (no sort, no broadcast
-        // of an unbounded vocab) — without the hint the tiny-scale
-        // planner broadcasts the CORPUS side, duplicating the scan.
-        val salted = model.withColumn("__salt",
-          explode(sequence(lit(0), lit(saltFactor - 1))))
-        // coalesce makes the salt NON-NULLABLE: otherwise the join infers
-        // isnotnull(salt), which — salt being derived from the id column —
-        // pushes into the probe's SCAN as a data filter the model subtree
-        // lacks, breaking exchange reuse (two corpus scans). It is also
-        // the correct null semantics: a null id must join exactly as it
-        // does unsalted.
-        val probe = gf.withColumn("__salt",
-          coalesce(pmod(xxhash64(col(idCol)), lit(saltFactor)), lit(0L)).cast("int"))
-        (probe.join(salted.hint("shuffle_hash"), Seq("__t", "__salt")),
-          // totals roll up from the |vocab|-row model, not the corpus pass
-          model.agg(sum("__np").as("__tp"), sum("__nn").as("__tn")))
-      } else {
-        val wt = Window.partitionBy("__t")
-        (g.withColumn("__np", sum(posTf).over(wt))
-          .withColumn("__nn", sum(negTf).over(wt)),
-          g.agg(sum(posTf).as("__tp"), sum(negTf).as("__tn")))
-      }
+    val wt = Window.partitionBy("__t")
+    val withCounts = g
+      .withColumn("__np", sum(posTf).over(wt))
+      .withColumn("__nn", sum(negTf).over(wt))
+    val totals = g.agg(sum(posTf).as("__tp"), sum(negTf).as("__tn"))
     val v = 1L << 20
     val pPos = (col("__np") + 1).cast("double") / (col("__tp") + v).cast("double")
     val pNeg = (col("__nn") + 1).cast("double") / (col("__tn") + v).cast("double")

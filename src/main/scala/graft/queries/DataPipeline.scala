@@ -18,7 +18,7 @@ object DataPipeline {
     q102, q106, q108, q116, q117, q118, q118f, q119, q120, q125, q127, q139, q140, q141, q143,
     q145, q150, q153, q155, q161, q162, q164, q165, q166, q167, q168, q170, q171, q172,
     q173, q175, q177, q178, q179, q180, q181, q182, q183, q184, q185, q186, q187,
-    q188, q189, q190, q192, q193, q194, q195, q196, q197, q198, q199, q201, q202, q203, q204,
+    q188, q189, q190, q192, q193, q194, q195, q196, q201, q202, q203, q204,
     q205, q206, q207, q208, q209)
 
   /** Dedup clusters from pairs: `Dedup.components` (iterative min-label
@@ -888,14 +888,19 @@ object DataPipeline {
     // 100 TB — and a window group can never split across tasks, while
     // the aggregate keeps a 1-slot buffer per (task, component) and
     // partial-aggregates map-side (n_members rides the same aggregate).
-    // Ordering is identical (q desc, ties doc_id asc; q is a finite
-    // non-null composite score — the window twin would rank the same).
+    // Ordering is identical (q desc, ties doc_id asc). q is NULL for a
+    // 0-token text and TopK skips it, as the oracle's q DESC puts NULLs
+    // last; a group with no scored member (empty texts share h = '')
+    // keeps its lowest doc_id, the component label, with a NULL
+    // rep_quality (`get`, unlike `getItem`, reads an empty array as NULL
+    // under ANSI mode).
+    val top = get(col("__top"), lit(0))
     comps.join(withH, comps("id") === withH("doc_id"))
       .groupBy(col("component"))
       .agg(count(lit(1)).as("n_members"),
         graft.functions.TopK.topK(col("q"), col("doc_id"), 1, largest = true).as("__top"))
-      .select(col("component"), col("__top").getItem(0).getField("id").as("rep_id"),
-        col("n_members"), col("__top").getItem(0).getField("key").as("rep_quality"))
+      .select(col("component"), coalesce(top.getField("id"), col("component")).as("rep_id"),
+        col("n_members"), top.getField("key").as("rep_quality"))
       .orderBy("component")
   }
 
@@ -2112,19 +2117,6 @@ object DataPipeline {
       .orderBy("doc_id")
   }
 
-  /** Skew-safe twin of q179 (`interpolatedBigramNll(skewSafe = true)`):
-    * all three reference-count attachments become groupBy model joins
-    * instead of window sums — see q197's rationale. Same oracle: exact
-    * long counts make the layouts value-identical. */
-  val q198 = QueryDef(
-    "q198_interp_nll_skew_safe",
-    oracle = Some(interpNllOracle)) { (s, dir) =>
-    graft.operators.Retrieval
-      .interpolatedBigramNll(Tables.load(s, dir, "documents"),
-        ref = col("lang") === "en", lambda = 0.7, skewSafe = true)
-      .orderBy("doc_id")
-  }
-
   /** Cross-document duplicated spans (`Dedup.duplicateSpans`, k=6): the
     * exact-substring dedup mask — maximal merged runs of 6-grams that
     * occur ≥ 2 times anywhere in the corpus. The oracle re-derives the
@@ -2956,25 +2948,6 @@ object DataPipeline {
       .orderBy("doc_id")
   }
 
-  /** Skew-safe twin of q184 (`naiveBayesLlr(skewSafe = true)`): the
-    * corpus-scale layout — class counts as a groupBy model table joined
-    * back on a SALTED (token, salt) key instead of window sums (the
-    * hottest token's window group serializes one task at 10⁹⁺ docs; the
-    * salt spreads it saltFactor ways by construction). Value-identical
-    * to the window form (exact long counts; the salt never reaches an
-    * aggregate), so it runs against the SAME oracle — the hash match
-    * proves the twin, not just the spec. */
-  val q197 = QueryDef(
-    "q197_nb_llr_skew_safe",
-    oracle = Some(nbLlrOracle)) { (s, dir) =>
-    graft.operators.Retrieval
-      .naiveBayesLlr(Tables.load(s, dir, "documents"),
-        target = col("source") === "src0",
-        train = pmod(col("doc_id"), lit(5)) =!= 0,
-        skewSafe = true)
-      .orderBy("doc_id")
-  }
-
   /** Prototypicality pruning (`Similarity.prototypicalityPrune`,
     * keepFrac=0.5, hardest): per-label integer-grid centroids (the q58
     * contract), cosine-to-own-centroid rank, keep the hard half of every
@@ -3136,9 +3109,9 @@ object DataPipeline {
   /** DSIR importance weights (`Curation.dsirWeights`): unigram hashed
     * bag-of-tokens log importance ratio of the English subset vs the
     * whole corpus, add-one smoothed over 4096 md5-16 dims. One tokenize
-    * pass; per-dim counts are window sums over the dim partition of the
-    * same pass and the totals aggregate reuses the tf exchange — text
-    * never shuffles, and the plan scans `documents` once (PlanSpec). */
+    * pass; the per-dim model aggregates the same pass and broadcasts
+    * back — text never shuffles, and the plan scans `documents` once
+    * (PlanSpec). */
   private val dsirOracle = s"""
       WITH tok AS (SELECT doc_id, lang = 'en' AS is_t,
                      unnest(${Text.tokensSql("text")}) AS t FROM documents),
@@ -3162,18 +3135,6 @@ object DataPipeline {
     oracle = Some(dsirOracle)) { (s, dir) =>
     Curation.dsirWeights(Tables.load(s, dir, "documents"),
         target = col("lang") === "en", dims = 4096)
-      .orderBy("doc_id")
-  }
-
-  /** Skew-safe twin of q178 (`dsirWeights(skewSafe = true)`): the per-dim
-    * model aggregates via groupBy (map-side combine kills the hot dim)
-    * and broadcasts back (≤ 65536 rows) — the probe side never
-    * re-shuffles. Same oracle as q178; see q197's rationale. */
-  val q199 = QueryDef(
-    "q199_dsir_skew_safe",
-    oracle = Some(dsirOracle)) { (s, dir) =>
-    Curation.dsirWeights(Tables.load(s, dir, "documents"),
-        target = col("lang") === "en", dims = 4096, skewSafe = true)
       .orderBy("doc_id")
   }
 

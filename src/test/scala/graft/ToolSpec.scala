@@ -15,7 +15,7 @@ class ToolSpec extends SparkSpec {
       assert(header == Seq("query", "exch_hash", "exch_range", "exch_rr", "exch_single",
         "bcast", "smj", "shj", "bhj", "bnlj", "cartesian", "windows", "global_window",
         "generate", "scans", "sort"))
-      assert(lines.size == 1 + 207)
+      assert(lines.size == 1 + 204)
       val rows = lines.tail.map(l => header.zip(l.split("\t")).toMap)
       assert(rows.forall(_.size == header.size), "a query failed to plan")
       val byName = rows.map(r => r("query") -> r).toMap
@@ -31,7 +31,8 @@ class ToolSpec extends SparkSpec {
   }
 
   test("an unknown subcommand is refused with the usage message") {
-    for (args <- Seq(Seq("bogus"), Nil, Seq("audit", "onlyOneArg"), Seq("scale", "nope", "/d"))) {
+    for (args <- Seq(Seq("bogus"), Nil, Seq("audit", "onlyOneArg"), Seq("scale", "nope", "/d"),
+        Seq("skew"))) {
       val e = intercept[IllegalArgumentException](Tool.command(args))
       assert(e.getMessage.startsWith("usage: graft.Tool"), args)
     }

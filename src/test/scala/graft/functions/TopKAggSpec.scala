@@ -24,16 +24,22 @@ class TopKAggSpec extends SparkSpec {
 
   test("matches the window formulation on random data with ties, both directions") {
     val rnd = new scala.util.Random(3)
-    // duplicate v values force tie-breaks; 17 groups, some smaller than k
+    // duplicate v values force tie-breaks; 17 groups, some smaller than k.
+    // -0.0 and 0.0 are the smallest keys: Spark's sort ties them
+    // (SQLOrderingUtil.compareDoubles), and so must TopK
     val df = Seq.tabulate(5000)(i =>
-      (rnd.nextInt(17), i.toLong, rnd.nextInt(40).toDouble / 4))
+      (rnd.nextInt(17), i.toLong, rnd.nextInt(41) match {
+        case 40 => -0.0
+        case n => n.toDouble / 4
+      }))
       .toDF("g", "id", "v")
       .repartition(13) // force the partial-buffer merge path
+    // compare keys by bit pattern: a Double set equates -0.0 with 0.0
+    def bits(rows: Array[(Int, Int, Long, Double)]) =
+      rows.map { case (g, r, id, v) => (g, r, id, java.lang.Double.doubleToRawLongBits(v)) }.toSet
     for (largest <- Seq(true, false)) {
-      val want = windowTopK(df, 7, largest)
-        .as[(Int, Int, Long, Double)].collect().toSet
-      val got = aggTopK(df, 7, largest)
-        .as[(Int, Int, Long, Double)].collect().toSet
+      val want = bits(windowTopK(df, 7, largest).as[(Int, Int, Long, Double)].collect())
+      val got = bits(aggTopK(df, 7, largest).as[(Int, Int, Long, Double)].collect())
       assert(got === want, s"largest=$largest")
       assert(got.nonEmpty)
     }

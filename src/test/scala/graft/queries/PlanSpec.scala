@@ -3,8 +3,12 @@ package graft.queries
 import graft.SparkSpec
 import graft.functions.Shingles
 import graft.plans.PlanShape
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Md5
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /** Physical-plan assertions: these lock in the properties that make the
   * queries survive a 100× scale-up — filters reaching the parquet scan,
@@ -17,6 +21,11 @@ class PlanSpec extends SparkSpec {
 
   private def plan(name: String): String =
     Registry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+
+  /** Parquet scans of `table` in `df`'s plan: the final plan once it has
+    * run (a reused exchange's scan counts once), the initial one before. */
+  private def scans(df: DataFrame, table: String): Int =
+    PlanShape(df).scans.count(_.relation.location.rootPaths.exists(_.getName == s"$table.parquet"))
 
   test("q2: predicate pushed to parquet scan, schema pruned") {
     val p = plan("q2_scan_pushdown")
@@ -172,18 +181,13 @@ class PlanSpec extends SparkSpec {
       "q184_nb_quality_llr",
       // q181 broadcast-crossJoins the one-row Σn^α scalar into the
       // group-width rate table — scalar shape like q89
-      "q181_temperature_sample",
-      // the skew-safe twins keep their originals' one-row scalar
-      // crossJoin (totals); the model attach itself is an equi-join
-      "q197_nb_llr_skew_safe",
-      "q198_interp_nll_skew_safe",
-      "q199_dsir_skew_safe")
+      "q181_temperature_sample")
     val offenders = Registry.all.flatMap { q =>
       val p =
-        try Registry.queries(q.name)(spark, dir).queryExecution.executedPlan.toString
+        try PlanShape(Registry.queries(q.name)(spark, dir))
         catch { case e: Throwable => fail(s"${q.name} failed to plan: ${e.getMessage}") }
-      val cartesian = p.contains("CartesianProduct")
-      val nlj = p.contains("BroadcastNestedLoopJoin") && !nljAllowed(q.name)
+      val cartesian = p.count[CartesianProductExec] > 0
+      val nlj = p.count[BroadcastNestedLoopJoinExec] > 0 && !nljAllowed(q.name)
       if (cartesian || nlj) Some(q.name) else None
     }
     assert(offenders.isEmpty, s"cartesian/NLJ plans: $offenders")
@@ -373,13 +377,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q167: novelty df folds into the shingle pass — documents scanned once") {
-    val p = plan("q167_ngram_novelty")
+    val df = Registry.queries("q167_ngram_novelty")(spark, dir)
+    val p = df.queryExecution.executedPlan.toString
     // the r7 two-subplan form (df aggregate + self-join on the exploded
     // frame) re-scanned and re-shingled the corpus: partial aggregation
     // below the exchange defeats exchange reuse, so the parquet scan
     // appeared twice. The window form shares one scan.
-    val scans = p.split("\n").count(l => l.contains("parquet") && l.contains("documents"))
-    assert(scans == 1, s"expected exactly one scan of documents, saw $scans:\n$p")
+    val n = scans(df, "documents")
+    assert(n == 1, s"expected exactly one scan of documents, saw $n:\n$p")
     assert(p.contains("Window"), s"df is not the piggybacked window pass:\n$p")
   }
 
@@ -403,23 +408,32 @@ class PlanSpec extends SparkSpec {
 
   test("q178: dsir scans documents once at runtime; text never rides an exchange") {
     val df = Registry.queries("q178_dsir_weights")(spark, dir)
-    // the totals aggregate consumes the SAME tf exchange as the window
-    // path — AQE stage reuse dedupes the identical subtrees at runtime,
-    // so execute first and assert on the FINAL plan (the initial plan
-    // legitimately shows the totals subplan un-deduped); a second
+    // the per-dim model aggregates the SAME tf exchange as the probe side
+    // — AQE stage reuse dedupes the identical subtrees at runtime, so
+    // execute first and assert on the FINAL plan (the initial plan
+    // legitimately shows the model subplan un-deduped); a second
     // runtime parquet scan would mean the corpus tokenizes twice (the
     // q167 lesson)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val scans = p.split("\n").count(l => l.contains("FileScan parquet") && l.contains("documents"))
-    assert(scans == 1, s"expected exactly one runtime scan of documents, saw $scans:\n$p")
-    assert(p.contains("ReusedExchange"),
-      s"totals aggregate does not reuse the tf exchange:\n$p")
-    PlanShape(df).shuffles.foreach { e =>
+    val shape = PlanShape(df)
+    val n = scans(df, "documents")
+    assert(n == 1, s"expected exactly one runtime scan of documents, saw $n:\n$p")
+    assert(shape.count[ReusedExchangeExec] > 0,
+      s"model aggregate does not reuse the tf exchange:\n$p")
+    shape.shuffles.foreach { e =>
       assert(!e.output.exists(_.name == "text"),
         s"document bodies ride through an exchange:\n$e")
     }
+    // a WindowExec group can never split across tasks, so the hot dim
+    // would serialize one task at corpus scale: the model (≤ dims rows)
+    // attaches as a broadcast join, and the probe keeps its partitioning
+    assert(shape.windows.isEmpty, s"q178 plans a WindowExec:\n$p")
+    assert(shape.count[BroadcastHashJoinExec] > 0, s"per-dim model is not broadcast back:\n$p")
+    // dim is non-nullable: no inferred isnotnull(dim) re-runs the md5
+    // chain in a Filter below the tf aggregate
+    val md5Filters = shape.all[FilterExec].filter(_.condition.exists(_.isInstanceOf[Md5]))
+    assert(md5Filters.isEmpty, s"a Filter re-evaluates md5:\n${md5Filters.mkString("\n")}")
   }
 
   test("q179: interpolated LM scans documents once at runtime; text never rides an exchange") {
@@ -428,10 +442,9 @@ class PlanSpec extends SparkSpec {
     // the U-total aggregate reuses the first window's exchange at runtime
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val scans = p.split("\n").count(l => l.contains("FileScan parquet") && l.contains("documents"))
-    assert(scans == 1, s"expected exactly one runtime scan of documents, saw $scans:\n$p")
-    assert(p.contains("ReusedExchange"),
+    val n = scans(df, "documents")
+    assert(n == 1, s"expected exactly one runtime scan of documents, saw $n:\n$p")
+    assert(PlanShape(df).count[ReusedExchangeExec] > 0,
       s"U-total aggregate does not reuse the bigram exchange:\n$p")
     PlanShape(df).shuffles.foreach { e =>
       assert(!e.output.exists(_.name == "text"),
@@ -445,10 +458,9 @@ class PlanSpec extends SparkSpec {
     // class-totals aggregate reuses the groupBy exchange at runtime
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val scans = p.split("\n").count(l => l.contains("FileScan parquet") && l.contains("documents"))
-    assert(scans == 1, s"expected exactly one runtime scan of documents, saw $scans:\n$p")
-    assert(p.contains("ReusedExchange"),
+    val n = scans(df, "documents")
+    assert(n == 1, s"expected exactly one runtime scan of documents, saw $n:\n$p")
+    assert(PlanShape(df).count[ReusedExchangeExec] > 0,
       s"class-totals aggregate does not reuse the token exchange:\n$p")
     PlanShape(df).shuffles.foreach { e =>
       assert(!e.output.exists(_.name == "text"),
@@ -456,44 +468,13 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("q197/q198/q199: skew-safe twins plan NO window operator — the model attach is a splittable join") {
-    for (name <- Seq("q197_nb_llr_skew_safe", "q198_interp_nll_skew_safe",
-                     "q199_dsir_skew_safe")) {
-      val df = Registry.queries(name)(spark, dir)
-      df.collect()
-      val shape = PlanShape(df)
-      // the whole point of the twin: a WindowExec group can never be
-      // split across tasks, so the hottest token serializes one task at
-      // corpus scale — the twin must attach model counts via joins only
-      assert(shape.windows.isEmpty,
-        s"$name plans a WindowExec — the skew-safe twin regressed to the window layout")
-      // still one corpus scan: model build and probe sit above the same
-      // (doc, token) aggregate exchange
-      val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-      val scans = p.split("\n").count(l => l.contains("FileScan parquet") && l.contains("documents"))
-      assert(scans == 1, s"$name: expected one runtime scan of documents, saw $scans:\n$p")
-      // and text still never shuffles
-      shape.shuffles.foreach { e =>
-        assert(!e.output.exists(_.name == "text"),
-          s"$name: document bodies ride through an exchange:\n$e")
-      }
-    }
-    // the dsir model is ≤ dims rows — it must come back as a BROADCAST
-    // join (probe side keeps its partitioning; the hot dim costs nothing)
-    val dsir = Registry.queries("q199_dsir_skew_safe")(spark, dir)
-    dsir.collect()
-    val dsirPlan = dsir.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(dsirPlan.contains("BroadcastHashJoin"),
-      s"q199: per-dim model is not broadcast back:\n$dsirPlan")
-  }
-
   test("q182: duplicate spans scan documents once; no self-join; text never rides an exchange") {
     val df = Registry.queries("q182_duplicate_spans")(spark, dir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
-    val scans = p.split("\n").count(l => l.contains("FileScan parquet") && l.contains("documents"))
-    assert(scans == 1, s"expected exactly one runtime scan of documents, saw $scans:\n$p")
+    val n = scans(df, "documents")
+    assert(n == 1, s"expected exactly one runtime scan of documents, saw $n:\n$p")
     // duplicated-ness is a window count over the gram partition of the
     // same pass — a postings SELF-JOIN here would be the df² fan-out
     assert(!p.contains("Join"), s"duplicate flag must not be a join:\n$p")
