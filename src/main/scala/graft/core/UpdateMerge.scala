@@ -34,13 +34,11 @@ object UpdateMerge {
     * `policies` (default Overwrite). Rows of `base` without a diff row keep
     * their values (left join + coalesce). */
   def merge(base: DataFrame, diff: DataFrame, keys: Seq[String],
-            policies: Map[String, Policy] = Map.empty,
-            broadcastDiff: Boolean = false): DataFrame = {
-    val d0 = if (broadcastDiff) broadcast(diff) else diff
+            policies: Map[String, Policy] = Map.empty): DataFrame = {
     // Disambiguate overlap by renaming diff columns, then fold them in.
     val overlap = diff.columns.toSet.intersect(base.columns.toSet) -- keys
     val diffOnly = diff.columns.toSet -- base.columns.toSet -- keys
-    val renamed = overlap.foldLeft(d0)((d, c) => d.withColumnRenamed(c, s"__diff_$c"))
+    val renamed = overlap.foldLeft(diff)((d, c) => d.withColumnRenamed(c, s"__diff_$c"))
     val joined = base.join(renamed, keys, "left")
     val merged = overlap.foldLeft(joined) { (df, c) =>
       val b = df(c); val d = df(s"__diff_$c")

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * NON-EMPTY inputs: on an empty array `MinHashes` returns null (no
   * shingles → no signature) where the builtin `array_min`-of-`transform`
   * chain returns an array of k nulls. Callers filter empty shingle sets
-  * before hashing (as `Dedup.minhashLshPairs` does).
+  * before hashing (as `Dedup.minhashLshRun` does).
   */
 object HashKernels {
 

@@ -51,17 +51,14 @@ object HistTable {
   def merge(hists: Seq[DataFrame]): DataFrame = {
     require(hists.nonEmpty)
     val binCols = hists.head.columns.filter(_.endsWith("_bin")).toSeq
-    hists.reduce(_ unionByName _)
-      .groupBy(binCols.map(col): _*)
-      .agg(sum("sumw").as("sumw"), sum("sumw2").as("sumw2"), sum("n").as("n"))
+    resum(hists.reduce(_ unionByName _), binCols)
   }
 
   /** Reduce away an axis by summing over it (reference residual-axis
     * reduction: columnflow/plotting/plot_util.py:400-446). */
   def project(hist: DataFrame, dropAxis: String): DataFrame = {
     val keep = hist.columns.filter(c => c.endsWith("_bin") && c != s"${dropAxis}_bin").toSeq
-    hist.groupBy(keep.map(col): _*)
-      .agg(sum("sumw").as("sumw"), sum("sumw2").as("sumw2"), sum("n").as("n"))
+    resum(hist, keep)
   }
 
   /** Fold under/overflow bins into the edge bins (reference flow folding:
@@ -70,9 +67,7 @@ object HistTable {
     val b = col(s"${axis.name}_bin")
     val folded = hist.withColumn(s"${axis.name}_bin",
       when(b === -1, 0).when(b === axis.nBins, axis.nBins - 1).otherwise(b))
-    val binCols = hist.columns.filter(_.endsWith("_bin")).toSeq
-    folded.groupBy(binCols.map(col): _*)
-      .agg(sum("sumw").as("sumw"), sum("sumw2").as("sumw2"), sum("n").as("n"))
+    resum(folded, hist.columns.filter(_.endsWith("_bin")).toSeq)
   }
 
   /** Equal-factor rebin of a regular axis (reference equal-width rebin:
@@ -90,9 +85,7 @@ object HistTable {
       when(b === -1, b)
         .when(b === axis.nBins, lit(nOut))
         .otherwise(floor(b / factor)).cast("int"))
-    val binCols = hist.columns.filter(_.endsWith("_bin")).toSeq
-    re.groupBy(binCols.map(col): _*)
-      .agg(sum("sumw").as("sumw"), sum("sumw2").as("sumw2"), sum("n").as("n"))
+    resum(re, hist.columns.filter(_.endsWith("_bin")).toSeq)
   }
 
   /** Category-bin selection over a category DAG (reference
@@ -112,14 +105,19 @@ object HistTable {
     val slices = requested.map { c =>
       if (present(c)) hist.filter(col(bin) === c)
       else
-        hist.filter(col(bin).isin(leaves(c): _*))
-          .groupBy(others.map(col): _*)
-          .agg(sum("sumw").as("sumw"), sum("sumw2").as("sumw2"), sum("n").as("n"))
+        resum(hist.filter(col(bin).isin(leaves(c): _*)), others)
           .withColumn(bin, lit(c).cast(hist.schema(bin).dataType))
           .select(hist.columns.map(col).toSeq: _*)
     }
     slices.reduce(_ unionByName _)
   }
+
+  /** Re-aggregate a bin table's value columns (sumw, sumw2, n) over
+    * `binCols` — the one re-sum behind merge, projection, flow folding,
+    * rebinning and category re-summing. */
+  private def resum(hist: DataFrame, binCols: Seq[String]): DataFrame =
+    hist.groupBy(binCols.map(col): _*)
+      .agg(sum("sumw").as("sumw"), sum("sumw2").as("sumw2"), sum("n").as("n"))
 
   /** Relabel an int-category bin axis with names from a dim table —
     * (reference translate_hist_intcat_to_strcat:

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Seeds, Text}
 
@@ -76,7 +77,8 @@ object Dedup {
     * document — pairwise dominance, deliberately NOT the transitive
     * closure: a deterministic one-pass rule (conservative next to the
     * sequential keep-greedy — a doc dominated only by an itself-dropped
-    * doc still drops), order-free and engine-re-derivable.
+    * doc still drops), order-free and engine-re-derivable. `pairs` of
+    * the returned [[DedupRun]] is the kept-ids frame.
     *
     * Scale: the corpus side contributes its band table (in production,
     * pre-materialized once and reused per batch) and its hashed shingle
@@ -85,57 +87,30 @@ object Dedup {
     * buckets over `maxBucket` drop before probing (the
     * [[minhashLshRun]] hot-bucket guard, applied per side). Batch
     * documents with no shingles (shorter than the gram width) are kept
-    * trivially, mirroring the pair builders. */
-  def incrementalNearDupNew(batch: DataFrame, corpus: DataFrame,
-                            id: String = "doc_id", text: String = "text",
-                            shingleN: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
-                            threshold: Double = 0.8, maxBucket: Long = 0L): DataFrame =
-    incrementalNearDupNewRun(batch, corpus, id, text, shingleN, k, rowsPerBand,
-      threshold, maxBucket).pairs
-
-  /** Handle-returning variant of [[incrementalNearDupNew]] — see
-    * [[DedupRun]] (`pairs` here is the kept-ids frame). The batch and
-    * corpus shingle caches are consumed by the band build AND the verify
-    * joins; without the handle a long-lived session leaks both cached
-    * tables per call (`unpersistCaches` / `materialize` releases them,
-    * as does the harnesses' per-query `catalog.clearCache()`). */
+    * trivially, mirroring the pair builders. The batch and corpus
+    * shingle caches are consumed by the band build AND the verify joins;
+    * `unpersistCaches` / `materialize` releases them, as does the
+    * harnesses' per-query `catalog.clearCache()`. */
   def incrementalNearDupNewRun(batch: DataFrame, corpus: DataFrame,
                                id: String = "doc_id", text: String = "text",
                                shingleN: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
                                threshold: Double = 0.8, maxBucket: Long = 0L): DedupRun = {
-    def banded(sh: DataFrame) = {
-      val all = sh
-        .withColumn("__mh", minhashes(col("__bh"), k))
-        .select(col("__id"), explode(bandKeys(col("__mh"), k, rowsPerBand)).as("__band"))
-      if (maxBucket <= 0) all
-      else {
-        val hot = all.groupBy("__band").count()
-          .filter(col("count") > maxBucket).select("__band")
-        all.join(broadcast(hot), Seq("__band"), "left_anti")
-      }
-    }
     val (bCache, bsh) = shingleHashes(batch, id, text, shingleN)
     val (cCache, csh) = shingleHashes(corpus, id, text, shingleN)
-    val bb = banded(bsh)
-    val cb = banded(csh)
-
-    def verified(cands: DataFrame, rightSh: DataFrame) = cands
-      .join(bsh.select(col("__id").as("id_a"), col("__bh").as("sh_a")), "id_a")
-      .join(rightSh.select(col("__id").as("id_b"), col("__bh").as("sh_b")), "id_b")
-      .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
+    val bb = bands(bsh, k, rowsPerBand, maxBucket)
+    val cb = bands(csh, k, rowsPerBand, maxBucket)
 
     // (a) batch → corpus probe
     val corpusCands = bb.select(col("__band"), col("__id").as("id_a"))
       .join(cb.select(col("__band"), col("__id").as("id_b")), "__band")
       .select("id_a", "id_b").distinct()
-    val hitCorpus = verified(corpusCands, csh).select(col("id_a").as(id)).distinct()
+    val hitCorpus = verifyJaccard(corpusCands, bsh, csh, threshold)
+      .select(col("id_a").as(id)).distinct()
 
     // (b) within-batch dominance by any smaller id
-    val a = bb.select(col("__band").as("__ba"), col("__id").as("id_a"))
-    val b = bb.select(col("__band").as("__bb"), col("__id").as("id_b"))
-    val batchCands = a.join(b, col("__ba") === col("__bb") && col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val dominated = verified(batchCands, bsh).select(col("id_b").as(id)).distinct()
+    val batchCands = keyPairs(bb, "__id", Seq("__band")).distinct()
+    val dominated = verifyJaccard(batchCands, bsh, bsh, threshold)
+      .select(col("id_b").as(id)).distinct()
 
     val kept = batch.select(col(id))
       .join(hitCorpus, Seq(id), "left_anti")
@@ -146,8 +121,7 @@ object Dedup {
   /** Exact-dedup projection: keep only the representative row per content
     * group — the distributed `DISTINCT ON (content)`. */
   def exactDedup(docs: DataFrame, id: String = "doc_id", text: String = "text"): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(digest(col(text))).orderBy(col(id))
+    val w = Window.partitionBy(digest(col(text))).orderBy(col(id))
     docs.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
@@ -216,7 +190,56 @@ object Dedup {
     i.cast("double") / (size(a) + size(b) - i)
   }
 
-  /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
+  /** LSH bands of shingled documents: (`__id`, `__band`), one row per
+    * band key of each document's k minhashes — signatures and shingles
+    * do NOT ride the explode. `maxBucket > 0` is the hot-bucket guard: one
+    * partial-aggregated count per band key, and keys holding more than
+    * `maxBucket` documents drop via a broadcast anti-join (the hot set is
+    * tiny by construction — it's the degenerate tail). */
+  private def bands(sh: DataFrame, k: Int, rowsPerBand: Int, maxBucket: Long): DataFrame = {
+    val all = sh
+      .withColumn("__mh", minhashes(col("__bh"), k))
+      .select(col("__id"), explode(bandKeys(col("__mh"), k, rowsPerBand)).as("__band"))
+    if (maxBucket <= 0) all
+    else {
+      val hot = all.groupBy("__band").count()
+        .filter(col("count") > maxBucket).select("__band")
+      all.join(broadcast(hot), Seq("__band"), "left_anti")
+    }
+  }
+
+  /** The candidate-pair self-join every pair builder here shares: rows of
+    * `df` that agree on every `keys` column, ordered `id_a < id_b` (each
+    * unordered pair once, no self-pairs). Returns `id_a`, `id_b` and each
+    * `carry` column as `<c>_a`, `<c>_b`. Keys compare column by column,
+    * so a null key never pairs. Pairs sharing several key values repeat;
+    * callers `distinct` them before verifying. */
+  private def keyPairs(df: DataFrame, id: String, keys: Seq[String],
+                       carry: Seq[String] = Nil): DataFrame = {
+    def side(s: String) = df.select((keys.map(k => col(k).as(s"${k}_$s")) :+ col(id).as(s"id_$s")) ++
+      carry.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"),
+      keys.map(k => col(s"${k}_a") === col(s"${k}_b")).reduce(_ && _) && col("id_a") < col("id_b"))
+      .select((Seq("id_a", "id_b") ++ carry.flatMap(c => Seq(s"${c}_a", s"${c}_b"))).map(col): _*)
+  }
+
+  /** Exact-Jaccard verify of candidate (`id_a`, `id_b`) pairs on the
+    * HASHED shingle sets (`__id`, `__bh`) of each side: set algebra over
+    * fixed longs instead of variable strings (same counts barring 2^-64
+    * collisions); each document's set shuffles once per side — never k×
+    * through the bands. Keeps pairs with `jac` ≥ `threshold`. */
+  private def verifyJaccard(cands: DataFrame, shA: DataFrame, shB: DataFrame,
+                            threshold: Double): DataFrame =
+    cands
+      .join(shA.select(col("__id").as("id_a"), col("__bh").as("sh_a")), "id_a")
+      .join(shB.select(col("__id").as("id_b"), col("__bh").as("sh_b")), "id_b")
+      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jac"))
+      .filter(col("jac") >= threshold)
+
+  /** MinHash-LSH near-duplicate pairs (`id_a`, `id_b`, `jac`) with
+    * exact-Jaccard verification. `run.materialize(f)` consumes the pairs
+    * and releases the intermediate cache in one scope (no lingering
+    * cached relations — asserted in `DataPipelineSpec`).
     *
     * @param k          minhash count (default 64)
     * @param rowsPerBand band size r; recall for similarity s is
@@ -226,15 +249,6 @@ object Dedup {
     * Pipeline: shingle → minhash → explode band keys → self-join per
     * bucket (id< id dedups the pair space) → distinct pairs → verify.
     * Only signatures and ids shuffle; document text never does.
-    */
-  def minhashLshPairs(docs: DataFrame, id: String = "doc_id", text: String = "text",
-                      shingleN: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
-                      threshold: Double = 0.8, maxBucket: Long = 0L): DataFrame =
-    minhashLshRun(docs, id, text, shingleN, k, rowsPerBand, threshold, maxBucket).pairs
-
-  /** Handle-returning variant of [[minhashLshPairs]]: `run.materialize(f)`
-    * consumes the pairs and releases the intermediate cache in one scope
-    * (no lingering cached relations — asserted in `DataPipelineSpec`).
     *
     * `maxBucket > 0` drops band buckets holding more than that many
     * documents BEFORE the candidate self-join — the standard hot-bucket
@@ -248,40 +262,14 @@ object Dedup {
   def minhashLshRun(docs: DataFrame, id: String = "doc_id", text: String = "text",
                     shingleN: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
                     threshold: Double = 0.8, maxBucket: Long = 0L): DedupRun = {
-    // 1. one base hash per distinct shingle (hashed once, reused k×),
-    //    persisted: see shingleHashes
+    // one base hash per distinct shingle (hashed once, reused k×),
+    // persisted: see shingleHashes
     val (cache, sh) = shingleHashes(docs, id, text, shingleN)
-    // 2. band keys only — signatures and shingles do NOT ride the explode
-    val allBands = sh
-      .withColumn("__mh", minhashes(col("__bh"), k))
-      .select(col("__id"), explode(bandKeys(col("__mh"), k, rowsPerBand)).as("__band"))
-    // hot-bucket guard: one partial-aggregated count per band key, hot
-    // keys dropped via broadcast anti-join (the hot set is tiny by
-    // construction — it's the degenerate tail)
-    val banded =
-      if (maxBucket <= 0) allBands
-      else {
-        val hot = allBands.groupBy("__band").count()
-          .filter(col("count") > maxBucket).select("__band")
-        allBands.join(broadcast(hot), Seq("__band"), "left_anti")
-      }
-    // 3. candidate pairs: bucket self-join on (band idx, band hash), then
-    //    DISTINCT before any verification — a pair sharing m bands must be
-    //    verified once, not m times
-    val a = banded.select(col("__band").as("band_a"), col("__id").as("id_a"))
-    val b = banded.select(col("__band").as("band_b"), col("__id").as("id_b"))
-    val candidates = a.join(b, col("band_a") === col("band_b") && col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    // 4. exact-Jaccard verify on the HASHED sets: set algebra over fixed
-    //    longs instead of variable strings (same counts barring 2^-64
-    //    collisions); each document's set shuffles once per side — never
-    //    k× through the bands
-    val shA = sh.select(col("__id").as("id_a"), col("__bh").as("sh_a"))
-    val shB = sh.select(col("__id").as("id_b"), col("__bh").as("sh_b"))
-    val pairs = candidates.join(shA, "id_a").join(shB, "id_b")
-      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jac"))
-      .filter(col("jac") >= threshold)
-    new DedupRun(pairs, Seq(cache))
+    // candidate pairs: bucket self-join on (band idx, band hash), then
+    // DISTINCT before any verification — a pair sharing m bands must be
+    // verified once, not m times
+    val candidates = keyPairs(bands(sh, k, rowsPerBand, maxBucket), "__id", Seq("__band")).distinct()
+    new DedupRun(verifyJaccard(candidates, sh, sh, threshold), Seq(cache))
   }
 
   /** 64-bit SimHash of a token-hash array: per-bit majority vote over the
@@ -297,34 +285,29 @@ object Dedup {
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs: band the signature into 4×16-bit chunks
-    * (any pair within Hamming ≤ 3 shares at least one exact chunk —
-    * pigeonhole), bucket-join on chunks, verify by full Hamming.
+  /** SimHash near-dup pairs (`id_a`, `id_b`, `dist`): one 64-bit
+    * signature per document, paired by [[signaturePairs]] — its
+    * `maxHamming + 1` chunk banding (4×16-bit chunks at the default radius
+    * 3) bucket-joins on equal chunks and verifies by full Hamming. Recall
+    * is EXACT for every `maxHamming` ≤ 15 (the pigeonhole is
+    * deterministic, not probabilistic), so the result equals the
+    * all-pairs Hamming filter — which is what the q37 oracle checks.
     *
-    * Recall is EXACT (the pigeonhole is deterministic, not probabilistic),
-    * so the result equals the all-pairs Hamming filter — which is what the
-    * q37 oracle checks.
-    *
-    * Scale ceiling + fix: chunk keys are 16-bit, so an UNBLOCKED corpus has
-    * at most 4×65,536 buckets and candidate pairs grow ~n²/2¹⁸ — fine at
-    * millions of docs, quadratic at billions. `blockCols` composes cheap
-    * blocking keys (language, length bucket, source) into the bucket key:
-    * buckets become 4×65,536×|blocks| and only same-block pairs are
-    * emitted — the same recall trade `blockedJaccardPairs` makes, with the
-    * cardinality math recorded in SCALE.md.
+    * Scale ceiling + fix: at radius 3 the chunk keys are 16-bit, so an
+    * UNBLOCKED corpus has at most 4×65,536 buckets and candidate pairs
+    * grow ~n²/2¹⁸ — fine at millions of docs, quadratic at billions.
+    * `blockCols` composes cheap blocking keys (language, length bucket,
+    * source) into the bucket key: buckets become 4×65,536×|blocks| and
+    * only same-block pairs are emitted — the same recall trade
+    * `blockedJaccardPairs` makes (a null block value never pairs), with
+    * the cardinality math recorded in SCALE.md.
     *
     * `portable = true` derives token hashes from md5 lower-64
     * (`Seeds.portableHash64`) instead of xxhash64 — slower, but any engine
     * with md5 reproduces the signatures bit-for-bit (the DuckDB oracle
     * re-derives them from hex digits). Documents with no tokens are
     * excluded (an empty token multiset has no meaningful signature; the
-    * majority vote would give all-ones). */
-  def simhashPairs(docs: DataFrame, id: String = "doc_id", text: String = "text",
-                   maxHamming: Int = 3, blockCols: Seq[String] = Nil,
-                   portable: Boolean = false): DataFrame =
-    simhashRun(docs, id, text, maxHamming, blockCols, portable).pairs
-
-  /** Handle-returning variant of [[simhashPairs]] — see [[DedupRun]]. */
+    * majority vote would give all-ones). See [[DedupRun]] for the cache. */
   def simhashRun(docs: DataFrame, id: String = "doc_id", text: String = "text",
                  maxHamming: Int = 3, blockCols: Seq[String] = Nil,
                  portable: Boolean = false): DedupRun = {
@@ -343,46 +326,34 @@ object Dedup {
       .withColumn("__sig", when(size(col("__th")) > 0, simhashFromHashes(col("__th"))))
       .drop("__th")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = cache.filter(col("__sig").isNotNull)
-    // signatures are 8 bytes — carry them through the chunk explode rather
-    // than re-joining (which would recompute the 64-fold signature once per
-    // join consumer); distinct dedups pairs sharing several chunks. Block
-    // values ride inside the bucket struct so the join stays single-key.
-    val blockFields = blockCols.zipWithIndex.map { case (c, i) => col(c).as(s"b$i") }
-    val chunked = sigs.select(col("__id"), col("__sig"),
-      explode(array((0 until 4).map(i =>
-        struct(blockFields :+ lit(i).as("i") :+
-          shiftright(col("__sig"), i * 16).bitwiseAND(0xFFFFL).as("c"): _*)): _*)).as("__chunk"))
-    val a = chunked.select(col("__chunk").as("chunk_a"), col("__id").as("id_a"), col("__sig").as("sig_a"))
-    val b = chunked.select(col("__chunk").as("chunk_b"), col("__id").as("id_b"), col("__sig").as("sig_b"))
-    val pairs = a.join(b, col("chunk_a") === col("chunk_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), hamming(col("sig_a"), col("sig_b")).as("dist"))
-      .filter(col("dist") <= maxHamming)
-      .distinct()
+    val pairs = signaturePairs(cache.filter(col("__sig").isNotNull), maxHamming,
+      id = "__id", sig = "__sig", blockCols = blockCols)
     new DedupRun(pairs, Seq(cache))
   }
 
-  /** Hamming near-dup pairs for ANY precomputed 64-bit signature table —
-    * the [[simhashPairs]] chunk banding exposed for signatures that do
-    * not come from text (perceptual image hashes from
-    * `Multimodal.imageAHashBatch`, audio fingerprints, …), generalized to
-    * ANY radius: the 64 bits split into `maxHamming + 1` chunks of
-    * ⌈64/(h+1)⌉ bits (the last chunk narrower when they don't divide
-    * evenly), bucket-join on equal chunks, full-Hamming verify. Recall is
+  /** Hamming near-dup pairs (`id_a`, `id_b`, `dist`) for ANY 64-bit
+    * signature table — text simhashes ([[simhashRun]]), perceptual image
+    * hashes from `Multimodal.imageAHashBatch`, audio fingerprints, … The
+    * 64 bits split into `maxHamming + 1` chunks of ⌈64/(h+1)⌉ bits (the
+    * last chunks narrower when they don't divide evenly), bucket-join on
+    * equal chunks (and equal `blockCols`), full-Hamming verify. Recall is
     * pigeonhole-EXACT for every h — h differing bits can dirty at most h
     * of the h+1 chunks, so every true pair shares ≥ 1 chunk verbatim.
+    * Signatures are 8 bytes, so they ride the chunk explode rather than
+    * being re-joined for the verify; `distinct` dedups pairs sharing
+    * several chunks.
     *
     * Scale math (the parameter's REAL cost): with chunk width
     * w = ⌈64/(h+1)⌉ an unblocked corpus forms ~(h+1)·n²/2ʷ⁺¹ candidate
     * pairs — h=3 ⇒ 16-bit keys (the simhash regime), h=8 ⇒ 8-bit keys
     * (the perceptual-image operating point, 256 buckets per chunk slot),
     * h=15 ⇒ 4-bit keys. Past h≈8 the chunk keys alone no longer prune at
-    * corpus scale; compose a blocking key upstream (near-dup images are
-    * same-dimensions/same-format in practice) exactly as
-    * `simhashPairs(blockCols)` does — the cap below fails fast where even
-    * blocked banding stops making sense. */
+    * corpus scale; compose a blocking key (near-dup images are
+    * same-dimensions/same-format in practice) through `blockCols` — the
+    * cap below fails fast where even blocked banding stops making sense. */
   def signaturePairs(sigs: DataFrame, maxHamming: Int = 3,
-                     id: String = "doc_id", sig: String = "sig"): DataFrame = {
+                     id: String = "doc_id", sig: String = "sig",
+                     blockCols: Seq[String] = Nil): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming > 15 means chunk keys under 4 bits - banding cannot prune: $maxHamming")
     val nChunks = maxHamming + 1
@@ -393,19 +364,16 @@ object Dedup {
     // degenerates the band join to ALL-PAIRS
     val widths = Array.tabulate(nChunks)(i => 64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
     val offsets = widths.scanLeft(0)(_ + _)
-    val base = sigs.select(col(id).as("__id"), col(sig).as("__sig"))
-    val chunked = base.select(col("__id"), col("__sig"),
+    val chunked = sigs.select((blockCols.map(col) :+ col(id).as("__id") :+ col(sig).as("__sig") :+
       explode(array((0 until nChunks).map { i =>
         // width == 64 only for h = 0 (one chunk = the whole signature);
         // (1L << 64) - 1 would be 0 under JVM shift-mod-64, so skip the mask
-        val c = if (widths(i) == 64) col("__sig")
-          else shiftright(col("__sig"), offsets(i)).bitwiseAND(lit((1L << widths(i)) - 1))
+        val c = if (widths(i) == 64) col(sig)
+          else shiftright(col(sig), offsets(i)).bitwiseAND(lit((1L << widths(i)) - 1))
         struct(lit(i).as("i"), c.as("c"))
-      }: _*)).as("__chunk"))
-    val a = chunked.select(col("__chunk").as("chunk_a"), col("__id").as("id_a"), col("__sig").as("sig_a"))
-    val b = chunked.select(col("__chunk").as("chunk_b"), col("__id").as("id_b"), col("__sig").as("sig_b"))
-    a.join(b, col("chunk_a") === col("chunk_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), hamming(col("sig_a"), col("sig_b")).as("dist"))
+      }: _*)).as("__chunk")): _*)
+    keyPairs(chunked, "__id", blockCols :+ "__chunk", carry = Seq("__sig"))
+      .select(col("id_a"), col("id_b"), hamming(col("__sig_a"), col("__sig_b")).as("dist"))
       .filter(col("dist") <= maxHamming)
       .distinct()
   }
@@ -467,10 +435,8 @@ object Dedup {
                           shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
     val sh = docs.select(
       (blockCols.map(col) :+ col(id).as("__id") :+
-        array_distinct(Text.shingles(col(text), shingleN)).as("__sh")): _*)
-    val a = sh.select(blockCols.map(c => col(c).as(s"${c}_a")) :+ col("__id").as("id_a") :+ col("__sh").as("sh_a"): _*)
-    val b = sh.select(blockCols.map(c => col(c).as(s"${c}_b")) :+ col("__id").as("id_b") :+ col("__sh").as("sh_b"): _*)
-    a.join(b, blockCols.map(c => col(s"${c}_a") === col(s"${c}_b")).reduce(_ && _) && col("id_a") < col("id_b"))
+        array_distinct(Text.shingles(col(text), shingleN)).as("sh")): _*)
+    keyPairs(sh, "__id", blockCols, carry = Seq("sh"))
       .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jac"))
       .filter(col("jac") >= threshold)
   }
@@ -507,10 +473,7 @@ object Dedup {
       ceil(col("sz") * lit(thresholdNum) / lit(thresholdDen)) + 1).cast("int")
     val pref = docSets.select(col("__id"),
       explode(slice(col("toks"), lit(1), prefLen)).as("tok"))
-    val cand = pref.as("a").join(pref.as("b"),
-        col("a.tok") === col("b.tok") && col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b")).distinct()
-    cand
+    keyPairs(pref, "__id", Seq("tok")).distinct()
       .join(docSets.select(col("__id").as("id_a"), col("toks").as("toks_a"),
         col("sz").as("sz_a")), Seq("id_a"))
       .join(docSets.select(col("__id").as("id_b"), col("toks").as("toks_b"),
@@ -552,30 +515,10 @@ object Dedup {
     * — exact on any engine, any partitioning. */
   def duplicateSpans(docs: DataFrame, k: Int = 6, minOccurrences: Int = 2,
                      idCol: String = "doc_id", textCol: String = "text",
-                     portable: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k >= 2, s"span gram width must be >= 2: $k")
-    require(minOccurrences >= 2, s"minOccurrences must be >= 2: $minOccurrences")
-    val g = docs
-      .select(col(idCol), posexplode(Text.shingles(col(textCol), k)).as(Seq("__pos", "__g0")))
-      .select(col(idCol), col("__pos"),
-        (if (portable) col("__g0") else xxhash64(col("__g0")).cast("string")).as("__g"))
-    val flagged = g
-      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy("__g")))
+                     portable: Boolean = true): DataFrame =
+    mergeSpans(gramOccurrences(docs, k, minOccurrences, idCol, textCol, portable)
       .filter(col("__cnt") >= minOccurrences)
-      .select(col(idCol), col("__pos"))
-    val wd = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
-    flagged
-      .withColumn("__prev", lag(col("__pos"), 1).over(wd))
-      .withColumn("__new",
-        when(col("__prev").isNull || col("__pos") > col("__prev") + k, 1L).otherwise(0L))
-      .withColumn("__isl", sum(col("__new")).over(wd))
-      .groupBy(col(idCol), col("__isl"))
-      .agg(min(col("__pos")).cast("long").as("span_start"),
-        (max(col("__pos")) + (k - 1)).cast("long").as("span_end"))
-      .select(col(idCol), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_tokens"))
-  }
+      .select(col(idCol), col("__pos")), idCol, k)
 
   /** KEEP-FIRST variant of [[duplicateSpans]] — the Lee et al. 2022
     * keep-one-occurrence policy at the same k-gram granularity: for each
@@ -599,20 +542,36 @@ object Dedup {
   def duplicateSpansKeepFirst(docs: DataFrame, k: Int = 6, minOccurrences: Int = 2,
                               idCol: String = "doc_id", textCol: String = "text",
                               portable: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k >= 2, s"span gram width must be >= 2: $k")
-    require(minOccurrences >= 2, s"minOccurrences must be >= 2: $minOccurrences")
-    val g = docs
-      .select(col(idCol), posexplode(Text.shingles(col(textCol), k)).as(Seq("__pos", "__g0")))
-      .select(col(idCol), col("__pos"),
-        (if (portable) col("__g0") else xxhash64(col("__g0")).cast("string")).as("__g"))
-    val wg = Window.partitionBy("__g")
-    val flagged = g
-      .withColumn("__cnt", count(lit(1)).over(wg))
-      .withColumn("__mn", min(struct(col(idCol).as("d"), col("__pos").as("p"))).over(wg))
+    val flagged = gramOccurrences(docs, k, minOccurrences, idCol, textCol, portable)
+      .withColumn("__mn", min(struct(col(idCol).as("d"), col("__pos").as("p")))
+        .over(Window.partitionBy("__g")))
       .filter(col("__cnt") >= minOccurrences &&
         !(col("__mn.d") === col(idCol) && col("__mn.p") === col("__pos")))
       .select(col(idCol), col("__pos"))
+    mergeSpans(flagged, idCol, k)
+  }
+
+  /** The positional shingle pass of the span detectors: one row per
+    * k-gram occurrence (idCol, `__pos`, `__g`), with `__cnt` = the gram's
+    * occurrence count corpus-wide, a window over the gram partition of
+    * that same pass. `portable = false` carries the gram's xxhash64
+    * instead of its text. */
+  private def gramOccurrences(docs: DataFrame, k: Int, minOccurrences: Int, idCol: String,
+                              textCol: String, portable: Boolean): DataFrame = {
+    require(k >= 2, s"span gram width must be >= 2: $k")
+    require(minOccurrences >= 2, s"minOccurrences must be >= 2: $minOccurrences")
+    docs
+      .select(col(idCol), posexplode(Text.shingles(col(textCol), k)).as(Seq("__pos", "__g0")))
+      .select(col(idCol), col("__pos"),
+        (if (portable) col("__g0") else xxhash64(col("__g0")).cast("string")).as("__g"))
+      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy("__g")))
+  }
+
+  /** Merge flagged k-gram occurrences (idCol, `__pos`) into maximal spans
+    * (idCol, span_start, span_end, span_tokens): gaps-and-islands with a
+    * lag and a running sum per document — every window is k tokens wide,
+    * so a new island starts exactly where `pos > prev + k`. */
+  private def mergeSpans(flagged: DataFrame, idCol: String, k: Int): DataFrame = {
     val wd = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
     flagged
       .withColumn("__prev", lag(col("__pos"), 1).over(wd))
@@ -682,7 +641,6 @@ object Dedup {
     * yield the single clipped window at position 0. */
   def winnowFingerprints(docs: DataFrame, k: Int = 4, window: Int = 5,
                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && window >= 1)
     val two40 = 1099511627776L
     val two20 = 1048576L
@@ -716,12 +674,10 @@ object Dedup {
                               shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
     val sh = docs.select(
       (blockCols.map(col) :+ col(id).as("__id") :+
-        array_distinct(Text.shingles(col(text), shingleN)).as("__sh")): _*)
-      .filter(size(col("__sh")) > 0)
-    val a = sh.select(blockCols.map(c => col(c).as(s"${c}_a")) :+ col("__id").as("id_a") :+ col("__sh").as("sh_a"): _*)
-    val b = sh.select(blockCols.map(c => col(c).as(s"${c}_b")) :+ col("__id").as("id_b") :+ col("__sh").as("sh_b"): _*)
+        array_distinct(Text.shingles(col(text), shingleN)).as("sh")): _*)
+      .filter(size(col("sh")) > 0)
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    a.join(b, blockCols.map(c => col(s"${c}_a") === col(s"${c}_b")).reduce(_ && _) && col("id_a") < col("id_b"))
+    keyPairs(sh, "__id", blockCols, carry = Seq("sh"))
       .select(col("id_a"), col("id_b"),
         (inter / size(col("sh_a"))).as("cont_a_in_b"),
         (inter / size(col("sh_b"))).as("cont_b_in_a"))

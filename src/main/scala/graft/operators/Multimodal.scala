@@ -139,7 +139,7 @@ object Multimodal {
     * digest is not): an 8×8 block grid over the first channel, bit = the
     * block's mean exceeds the image mean, packed MSB-first row-major
     * into one signed long. Near-dup images then reduce to small Hamming
-    * distance — the [[Dedup.simhashPairs]] banding applies unchanged, so
+    * distance — the [[Dedup.signaturePairs]] banding applies unchanged, so
     * image dedup rides the existing text-dedup machinery.
     *
     * Exactness contract (what the oracle mirrors): block boundaries are

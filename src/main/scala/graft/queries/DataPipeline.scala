@@ -255,9 +255,9 @@ object DataPipeline {
       SELECT id_a, id_b, jac FROM p WHERE jac >= 0.9
       ORDER BY id_a, id_b"""),
     bench = true) { (s, dir) =>
-    Dedup.minhashLshPairs(
+    Dedup.minhashLshRun(
       Tables.load(s, dir, "documents"), k = 64, rowsPerBand = 4, threshold = 0.9)
-      .orderBy("id_a", "id_b")
+      .pairs.orderBy("id_a", "id_b")
   }
 
   /** DuckDB mirror of the PORTABLE SimHash pair query: per-token md5
@@ -304,8 +304,8 @@ object DataPipeline {
     "q37_simhash",
     oracle = Some(simhashOracleSql(3)),
     bench = true) { (s, dir) =>
-    Dedup.simhashPairs(Tables.load(s, dir, "documents"), maxHamming = 3, portable = true)
-      .orderBy("id_a", "id_b")
+    Dedup.simhashRun(Tables.load(s, dir, "documents"), maxHamming = 3, portable = true)
+      .pairs.orderBy("id_a", "id_b")
   }
 
   // ---- similarity search ----
@@ -1978,7 +1978,7 @@ object DataPipeline {
       .orderBy("doc_id")
   }
 
-  /** Incremental batch-vs-corpus NEAR-dup (`Dedup.incrementalNearDupNew`):
+  /** Incremental batch-vs-corpus NEAR-dup (`Dedup.incrementalNearDupNewRun`):
     * the production LSH shape — a new ingest batch (every 10th document)
     * probes the existing corpus' band index; kept = batch docs with no
     * Jaccard ≥ 0.9 match in the corpus nor with a smaller-id batch doc
@@ -2005,11 +2005,11 @@ object DataPipeline {
         AND doc_id NOT IN (SELECT doc_id FROM dom)
       ORDER BY doc_id""")) { (s, dir) =>
     val docs = Tables.load(s, dir, "documents")
-    Dedup.incrementalNearDupNew(
+    Dedup.incrementalNearDupNewRun(
         batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0),
         corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
         threshold = 0.9)
-      .orderBy("doc_id")
+      .pairs.orderBy("doc_id")
   }
 
   /** BPE vocabulary training over the corpus (`operators/Bpe`): 16 merge
@@ -3081,11 +3081,15 @@ object DataPipeline {
       .orderBy("vec_id")
   }
 
+  /** Each `v$k` reads `w$k` twice (directly and through `m$k`), and
+    * DuckDB inlines a CTE that is not MATERIALIZED into every reader, so
+    * without the two MATERIALIZED marks the Gram CTE `gu` would be
+    * re-evaluated on the order of 2^iters times. */
   private def pcaOracleSql(dim: Int, iters: Int): String = {
     val prod = Compat.roundSql(
       "CAST(embedding[a.i] AS DOUBLE) * CAST(embedding[b.i] AS DOUBLE)", 9)
     def step(k: Int) = s""",
-      w$k AS (SELECT gf.i AS dim, SUM(CAST(gf.g * v${k - 1}.v AS DECIMAL(38,18))) AS w
+      w$k AS MATERIALIZED (SELECT gf.i AS dim, SUM(CAST(gf.g * v${k - 1}.v AS DECIMAL(38,18))) AS w
               FROM gf JOIN v${k - 1} ON v${k - 1}.dim = gf.j GROUP BY 1),
       m$k AS (SELECT MAX(ABS(w)) AS m FROM w$k),
       v$k AS (SELECT dim, CAST(${Compat.roundSql(
@@ -3094,7 +3098,7 @@ object DataPipeline {
               FROM w$k CROSS JOIN m$k)"""
     s"""
       WITH idx AS (SELECT unnest(generate_series(1, $dim)) AS i),
-      gu AS (SELECT a.i AS i, b.i AS j,
+      gu AS MATERIALIZED (SELECT a.i AS i, b.i AS j,
                SUM(CAST($prod AS DECIMAL(18,9))) AS g
              FROM embeddings CROSS JOIN idx a CROSS JOIN idx b
              WHERE b.i >= a.i GROUP BY 1, 2),

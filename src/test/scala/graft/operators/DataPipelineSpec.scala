@@ -87,8 +87,8 @@ class DataPipelineSpec extends SparkSpec {
   test("minhash LSH finds the near-dup pair and the exact dup") {
     // rowsPerBand=2: catch probability at jaccard 0.55 is 1-(1-0.55²)^32 ≈ 1
     // (r=4 would be ~0.79 — too lossy for a deterministic assertion)
-    val pairs = Dedup.minhashLshPairs(docs, k = 64, rowsPerBand = 2, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = Dedup.minhashLshRun(docs, k = 64, rowsPerBand = 2, threshold = 0.5)
+      .materialize(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 4L))) // exact dup: jaccard 1.0
     // docs 1,2 differ in last token: 5/9 trigrams shared → jac ≈ 0.55
     assert(pairs.contains((1L, 2L)) && pairs.contains((2L, 4L)))
@@ -113,39 +113,73 @@ class DataPipelineSpec extends SparkSpec {
       (ia, sa) <- sigs; (ib, sb) <- sigs if ia < ib
       if java.lang.Long.bitCount(sa ^ sb) <= 3
     } yield (ia, ib)).toSet
-    val banded = Dedup.simhashPairs(docs, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val banded = Dedup.simhashRun(docs, maxHamming = 3)
+      .materialize(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(banded == truth)
   }
 
   test("portable simhash matches xxhash simhash's pair structure for exact dups") {
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 0, portable = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = Dedup.simhashRun(docs, maxHamming = 0, portable = true)
+      .materialize(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 4L))) // identical text → distance 0 under any hash
   }
 
   test("blocked simhash = unblocked pairs restricted to equal block keys") {
-    val unblocked = Dedup.simhashPairs(docs, maxHamming = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val unblocked = Dedup.simhashRun(docs, maxHamming = 10)
+      .materialize(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     val bySource = docs.collect()
       .map(r => r.getLong(0) -> r.getString(3)).toMap
-    val blocked = Dedup.simhashPairs(docs, maxHamming = 10, blockCols = Seq("source"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val blocked = Dedup.simhashRun(docs, maxHamming = 10, blockCols = Seq("source"))
+      .materialize(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(blocked == unblocked.filter { case (a, b) => bySource(a) == bySource(b) })
     assert(blocked != unblocked) // docs 1/4 are dups across sources a/b
   }
 
+  test("simhash recall is exact past radius 3: maxHamming 4 and 10 equal all-pairs Hamming") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(7)
+    def word() = s"w${rnd.nextInt(2000)}"
+    // 60 families of 120-token texts: each variant swaps 1-3 tokens of its
+    // base, so in-family signatures sit a few bits apart
+    val texts = (0 until 60).flatMap { _ =>
+      val base = Vector.fill(120)(word())
+      (base +: Seq.fill(6) {
+        (1 to 1 + rnd.nextInt(3)).foldLeft(base)((t, _) => t.updated(rnd.nextInt(t.size), word()))
+      }).map(_.mkString(" "))
+    }
+    val corpus = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val sig = corpus.select(col("doc_id"), Dedup.simhash(Text.tokens(col("text"))))
+      .as[(Long, Long)].collect().toMap
+    // differing bits in all four 16-bit chunks: no chunk of a fixed
+    // 4-chunk banding is shared, so only (h+1)-chunk banding finds the pair
+    def dirtiesAllFour(x: Long) = (0 until 4).forall(c => ((x >>> (16 * c)) & 0xFFFFL) != 0)
+    for (h <- Seq(4, 10)) {
+      val truth = (for {
+        (a, sa) <- sig.toSeq; (b, sb) <- sig.toSeq if a < b
+        d = java.lang.Long.bitCount(sa ^ sb) if d <= h
+      } yield (a, b, d)).toSet
+      assert(truth.exists { case (a, b, _) => dirtiesAllFour(sig(a) ^ sig(b)) },
+        s"fixture holds no pair within $h bits that dirties all four 16-bit chunks")
+      val banded = Dedup.simhashRun(corpus, maxHamming = h)
+        .materialize(_.collect()).map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(banded === truth, s"maxHamming=$h")
+    }
+    intercept[IllegalArgumentException] { Dedup.simhashRun(corpus, maxHamming = 16) }
+    spark.catalog.clearCache()
+  }
+
   test("hot-bucket guard: generous cap keeps all pairs, cap of 1 kills every bucket") {
-    val base = Dedup.minhashLshPairs(docs, k = 64, rowsPerBand = 2, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val base = Dedup.minhashLshRun(docs, k = 64, rowsPerBand = 2, threshold = 0.5)
+      .materialize(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(base.nonEmpty)
     // a cap larger than any bucket is a no-op
-    val capped = Dedup.minhashLshPairs(docs, k = 64, rowsPerBand = 2, threshold = 0.5,
-      maxBucket = 1000L).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val capped = Dedup.minhashLshRun(docs, k = 64, rowsPerBand = 2, threshold = 0.5,
+      maxBucket = 1000L).materialize(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == base)
     // every bucket with a candidate pair holds ≥2 docs → cap 1 drops all
-    val none = Dedup.minhashLshPairs(docs, k = 64, rowsPerBand = 2, threshold = 0.5,
-      maxBucket = 1L).count()
+    val none = Dedup.minhashLshRun(docs, k = 64, rowsPerBand = 2, threshold = 0.5,
+      maxBucket = 1L).materialize(_.count())
     assert(none == 0)
     spark.catalog.clearCache()
   }
@@ -435,14 +469,14 @@ class DataPipelineSpec extends SparkSpec {
       (4L, base.split(" ").reverse.mkString(" ")), // same words, reversed order: different shingles
       (5L, "xy")              // shorter than the shingle width: kept trivially
     ).toDF("doc_id", "text")
-    val kept = Dedup.incrementalNearDupNew(batch, corpus, threshold = 0.7)
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val kept = Dedup.incrementalNearDupNewRun(batch, corpus, threshold = 0.7)
+      .materialize(_.collect()).map(_.getLong(0)).sorted.toSeq
     assert(kept === Seq(3L, 4L, 5L))
 
     // dominance alone (empty corpus side): 1 kept, 2 dropped by smaller id
-    val kept2 = Dedup.incrementalNearDupNew(
+    val kept2 = Dedup.incrementalNearDupNewRun(
         batch.filter($"doc_id" <= 2), corpus.limit(0), threshold = 0.7)
-      .collect().map(_.getLong(0)).sorted.toSeq
+      .materialize(_.collect()).map(_.getLong(0)).sorted.toSeq
     assert(kept2 === Seq(1L))
   }
 

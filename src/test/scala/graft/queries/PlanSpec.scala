@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Md5
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 
@@ -516,6 +517,22 @@ class PlanSpec extends SparkSpec {
           s"$name tokenizes below the round-robin exchange:\n$e")
       }
     }
+  }
+
+  test("q36: the LSH candidates are one distinct: an aggregate over exactly (id_a, id_b)") {
+    // perfbench's operators.lsh_candidate_pairs reads this node's output rows
+    val df = Registry.queries("q36_minhash_lsh")(spark, dir)
+    df.collect()
+    val distinct = PlanShape(df).all[BaseAggregateExec].filter { a =>
+      a.groupingExpressions.map(_.references.map(_.name).mkString) == Seq("id_a", "id_b") &&
+        a.aggregateExpressions.isEmpty
+    }
+    assert(distinct.nonEmpty && distinct.forall(_.metrics.contains("numOutputRows")),
+      s"no distinct over (id_a, id_b):\n${df.queryExecution.executedPlan}")
+    // registry queries drop their DedupRun handles: release the shingle
+    // and signature caches of this test and the q36/q37 test above, which
+    // later suites' no-cached-relations checks would otherwise see
+    spark.catalog.clearCache()
   }
 
   test("whole-stage codegen covers the scan-filter-project pipeline") {

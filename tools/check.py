@@ -1,8 +1,13 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run Verify output
 against DuckDB oracles and compare (sorting columns by name, rows by all
-columns). Usage: python3 tools/check.py <sfDir> <verifyOutDir>"""
-import sys, os, json, glob
+columns). Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+
+Each oracle runs in its own forked child process, so an oracle that
+kills its process (a DuckDB segfault, an allocator abort) is reported as
+a failure with its name and exit status and the sweep goes on. The exit
+status is non-zero if any oracle failed or crashed."""
+import sys, os, json, glob, signal, traceback
 import duckdb
 import pandas as pd
 import numpy as np
@@ -46,27 +51,19 @@ def _fresh_con():
         c.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     return c
 
-con = fresh_con()
-oracles = json.load(open(f"{outdir}/oracle_sql.json"))
-fails = []
-n_run = 0
-for name in sorted(os.listdir(outdir)):
-    # DuckDB accumulates allocator state across many executes on one
-    # connection; in a full-registry sweep (~170 oracles) the first
-    # too-large allocation poisons the connection and every later oracle
-    # on it fails with "Failed to allocate" regardless of size. A fresh
-    # connection per oracle (views re-register lazily, ~ms) isolates
-    # each oracle's memory use completely.
+def check_one(name):
+    """Compare one Verify dump with its oracle; print one status line.
+    Returns True when it matches (or has no oracle: rows-only)."""
     d = os.path.join(outdir, name)
-    if not os.path.isdir(d):
-        continue  # only real oracle dirs pay the reconnect below
-    n_run += 1
-    con.close()
-    con = fresh_con()
     spark_df = pd.concat([pd.read_parquet(f) for f in sorted(glob.glob(f"{d}/*.parquet"))])
     if name not in oracles:
         print(f"{name:32s} rows-only: {len(spark_df)} rows")
-        continue
+        return True
+    # A fresh process and connection per oracle: DuckDB accumulates
+    # allocator state (and memory maps) across executes, and in a
+    # full-registry sweep the first too-large allocation would otherwise
+    # poison every later oracle.
+    con = fresh_con()
     try:
         # Optional per-oracle wall-clock cap (seconds) for scale sweeps:
         # a quadratic oracle that slipped the exclusion list should log a
@@ -86,18 +83,13 @@ for name in sorted(os.listdir(outdir)):
             finally:
                 done.set()
                 t.join()
-                # absorb a late interrupt that landed after completion so
-                # it cannot cancel the NEXT oracle
-                try:
-                    con.execute("SELECT 1")
-                except Exception:
-                    pass
         else:
             oracle_df = con.execute(oracles[name]).df()
     except Exception as e:
         print(f"{name:32s} ORACLE SQL ERROR: {e}")
-        fails.append(name)
-        continue
+        return False
+    finally:
+        con.close()  # the child leaves with os._exit: drop the spill files now
     a = spark_df[sorted(spark_df.columns)].reset_index(drop=True)
     b = oracle_df[sorted(oracle_df.columns)].reset_index(drop=True)
     status = []
@@ -134,9 +126,43 @@ for name in sorted(os.listdir(outdir)):
                     status.append(f"col {c}: {n} mismatches")
     if status:
         print(f"{name:32s} FAIL: {'; '.join(status)}")
+        return False
+    print(f"{name:32s} OK ({len(a)} rows)")
+    return True
+
+
+def check_isolated(name):
+    """Run check_one in a forked child; True only if the child exits 0.
+    A child killed by a signal or exiting abnormally is reported here."""
+    sys.stdout.flush()
+    sys.stderr.flush()
+    pid = os.fork()
+    if pid == 0:
+        code = 1
+        try:
+            code = 0 if check_one(name) else 1
+        except BaseException as e:
+            print(f"{name:32s} FAIL: uncaught {type(e).__name__}: {e}")
+            traceback.print_exc()
+        finally:
+            sys.stdout.flush()
+            sys.stderr.flush()
+            os._exit(code)
+    _, status = os.waitpid(pid, 0)
+    if os.WIFSIGNALED(status):
+        sig = os.WTERMSIG(status)
+        print(f"{name:32s} CRASHED: killed by {signal.Signals(sig).name} (exit code {128 + sig})")
+        return False
+    code = os.WEXITSTATUS(status)
+    if code not in (0, 1):
+        print(f"{name:32s} CRASHED: exit code {code}")
+    return code == 0
+
+oracles = json.load(open(f"{outdir}/oracle_sql.json"))
+fails = []
+for name in sorted(os.listdir(outdir)):
+    if os.path.isdir(os.path.join(outdir, name)) and not check_isolated(name):
         fails.append(name)
-    else:
-        print(f"{name:32s} OK ({len(a)} rows)")
 # A registered oracle whose Verify dump is MISSING must fail, not skip:
 # a mid-sweep write error (e.g. transient disk-full) would otherwise read
 # as a green sweep. (Caught live in round 8: a concurrent DuckDB spill
