@@ -383,40 +383,71 @@ object Dedup {
     * a pair list where A~B and B~C must collapse {A,B,C} together.
     *
     * Min-label propagation: every node repeatedly takes the minimum id
-    * among itself and its neighbors until a fixpoint. Each iteration is
-    * one key-shuffle join; the iteration count is the graph diameter, and
-    * near-dup graphs are unions of stars/cliques with tiny diameters, so
-    * 2–3 rounds in practice. `localCheckpoint` truncates the plan lineage
-    * each round — without it the loop compiles an ever-growing DAG.
+    * among itself and its neighbors until a fixpoint; the round count is
+    * the graph diameter. Round 1 needs no labels — a node's neighbors
+    * still carry their own ids, so its label is least(id, min(dst)) over
+    * its edges — and runs in one plan with round 2, which joins the
+    * edges to the round-1 labels and counts its changes while it runs.
+    * So a call is ONE SQL execution when round 2 changes nothing (stars
+    * and cliques, i.e. most near-dup graphs) and one more per further
+    * round. `localCheckpoint` truncates the plan lineage each execution —
+    * without it the loop compiles an ever-growing DAG.
     *
     * Returns (id, component) with component = min id in the cluster; docs
-    * absent from `pairs` are their own components and are not emitted.
+    * absent from `pairs` are their own components and are not emitted. A
+    * null endpoint joins nothing: it is emitted once as (null, null).
     *
     * Throws IllegalStateException if the fixpoint is not reached within
-    * `maxIters` — truncated labels are NOT valid components and silently
-    * returning them would under-merge clusters. */
+    * `maxIters` propagation rounds — truncated labels are NOT valid
+    * components and silently returning them would under-merge clusters. */
   def components(pairs: DataFrame, a: String = "id_a", b: String = "id_b",
                  maxIters: Int = 20): DataFrame = {
+    require(maxIters >= 1, s"components: maxIters must be positive, got $maxIters")
+    // min is idempotent under duplicate edges, so no distinct; the persist
+    // keeps the callers' pair plans from being recomputed every round
     val edges = pairs.select(col(a).as("src"), col(b).as("dst"))
       .union(pairs.select(col(b).as("src"), col(a).as("dst")))
-      .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint()
-    var changed = 1L
-    var it = 0
+    // a round's tail: a label changes iff its smallest neighbor label `nmin`
+    // is smaller; the round counts its changes (and `counts`) while it runs,
+    // so each round is one execution
+    def settle(joined: DataFrame, counts: Column*): (DataFrame, Map[String, Any]) = {
+      val obs = new Observation()
+      val next = joined
+        .observe(obs, count(when(col("nmin") < col("component"), lit(1))).as("changed"),
+          counts: _*)
+        .select(col("id"),
+          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
+        .localCheckpoint()
+      (next, obs.get)
+    }
+    // Rounds 1 and 2 in one execution. Round 1 needs no labels: a node's
+    // neighbors still carry their own ids, so its label is least(id, min(dst)).
+    // Round 2 joins each edge to its dst's round-1 label and groups by src,
+    // whose rows also give src's own round-1 label. Min skips a null dst,
+    // which the later rounds' joins never match either; a null id gets a
+    // null label, as in those rounds. The join is a merge join: round 1 is
+    // already partitioned by its key, and the edges' shuffle runs beside
+    // it, where a broadcast of round 1 would be one more serial job.
+    val round1 = edges.groupBy("src").agg(min("dst").as("m"))
+      .select(col("src").as("dst"), least(col("src"), col("m")).as("c"))
+    val (second, seen) = settle(
+      edges.join(round1.hint("merge"), Seq("dst"), "left")
+        .groupBy(col("src").as("id")).agg(min("dst").as("m"), min("c").as("nmin"))
+        .select(col("id"),
+          when(col("id").isNotNull, least(col("id"), col("m"))).as("component"),
+          when(col("id").isNotNull, col("nmin")).as("nmin")),
+      count(when(col("component") < col("id"), lit(1))).as("changed1"))
+    var labels = second
+    var changed = seen(if (maxIters == 1) "changed1" else "changed").asInstanceOf[Long]
+    var it = 2
     while (changed > 0 && it < maxIters) {
       val neighborMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min("component").as("nmin"))
-      // a label changes iff a neighbor's is smaller; the round counts its
-      // changes while it runs, so each round is one execution
-      val round = new Observation()
-      labels = labels.join(neighborMin, labels("id") === col("src"), "left")
-        .observe(round, count(when(col("nmin") < col("component"), lit(1))).as("changed"))
-        .select(labels("id"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
-        .localCheckpoint()
-      changed = round.get("changed").asInstanceOf[Long]
+      val (next, r) = settle(labels.join(neighborMin, labels("id") === col("src"), "left")
+        .select(labels("id"), col("component"), col("nmin")))
+      labels = next
+      changed = r("changed").asInstanceOf[Long]
       it += 1
     }
     edges.unpersist()

@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.functions.Text
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 class DataPipelineSpec extends SparkSpec {
@@ -421,11 +422,35 @@ class DataPipelineSpec extends SparkSpec {
     assert(comp == Seq(1L))
   }
 
-  test("components runs one SQL execution per round, plus the initial labels") {
-    val s = spark
-    import s.implicits._
-    // star 10-(11,12): round 1 relabels 11 and 12, round 2 changes nothing
-    val pairs = Seq((10L, 11L), (10L, 12L)).toDF("id_a", "id_b")
+  /** The min-label loop `components` replaced: identity labels in one
+    * execution, then one execution per round. The reference for the
+    * single-plan first rounds. */
+  private def componentsByRounds(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .distinct()
+    var labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("component", col("id")).localCheckpoint()
+    var changed = 1L
+    var it = 0
+    while (changed > 0 && it < maxIters) {
+      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
+        .groupBy(col("src")).agg(min("component").as("nmin"))
+      val round = new Observation()
+      labels = labels.join(neighborMin, labels("id") === col("src"), "left")
+        .observe(round, count(when(col("nmin") < col("component"), lit(1))).as("changed"))
+        .select(labels("id"),
+          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
+        .localCheckpoint()
+      changed = round.get("changed").asInstanceOf[Long]
+      it += 1
+    }
+    if (changed > 0) throw new IllegalStateException(s"$changed labels still changing")
+    labels
+  }
+
+  /** Root SQL executions started while `body` runs. */
+  private def executionsDuring[T](body: => T): (T, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
@@ -436,12 +461,72 @@ class DataPipelineSpec extends SparkSpec {
     }
     ColumnBridge.waitListenerBusEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
-    val labels =
-      try { val l = Dedup.components(pairs); ColumnBridge.waitListenerBusEmpty(spark.sparkContext); l }
-      finally spark.sparkContext.removeSparkListener(listener)
-    assert(n.get === 3)
+    try { val r = body; ColumnBridge.waitListenerBusEmpty(spark.sparkContext); (r, n.get) }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def labelRows(df: DataFrame): Seq[(Option[Long], Option[Long])] =
+    df.collect().toSeq.map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+      Option(r.get(1)).map(_.asInstanceOf[Long]))).sorted
+
+  test("components equals the round-by-round loop on seeded random graphs") {
+    val s = spark
+    import s.implicits._
+    def outcome(f: => DataFrame): Either[String, Seq[(Option[Long], Option[Long])]] =
+      try Right(labelRows(f)) catch { case _: IllegalStateException => Left("no fixpoint") }
+    // unions of chains, stars and cliques over shuffled ids, listed with
+    // duplicate and reversed pairs and self-loops
+    def graph(seed: Int): Seq[(Option[Long], Option[Long])] = {
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((1L to 200L).toVector).iterator
+      val edges = (1 to 2 + rnd.nextInt(4)).flatMap { _ =>
+        val k = 2 + rnd.nextInt(5)
+        val v = Vector.fill(k)(ids.next())
+        rnd.nextInt(3) match {
+          case 0 => v.sliding(2).map(p => (p(0), p(1))).toSeq
+          case 1 => v.tail.map(x => (v.head, x))
+          case _ => for (i <- v; j <- v if i < j) yield (i, j)
+        }
+      }
+      val extra = Seq.fill(3)(edges(rnd.nextInt(edges.size))).flatMap(e => Seq(e, e.swap)) ++
+        Seq.fill(2)(ids.next()).map(x => (x, x))
+      rnd.shuffle(edges ++ extra).map { case (x, y) => (Some(x), Some(y)) }
+    }
+    val graphs = (1 to 5).map(graph) ++ Seq(
+      Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)), (Some(4L), Some(4L))),
+      Seq.empty[(Option[Long], Option[Long])])
+    val converged = for ((g, i) <- graphs.zipWithIndex; maxIters <- Seq(1, 2, 20)) yield {
+      val pairs = g.toDF("id_a", "id_b")
+      val want = outcome(componentsByRounds(pairs, maxIters))
+      assert(outcome(Dedup.components(pairs, maxIters = maxIters)) === want,
+        s"graph $i, maxIters $maxIters")
+      if (maxIters == 20) assert(want.isRight, s"graph $i")
+      maxIters -> want.isRight
+    }
+    // the round limit bites on some graphs and not on others
+    assert(converged.filter(_._1 == 2).map(_._2).toSet === Set(true, false))
+    // the null endpoint keeps its (null, null) row instead of a neighbor's label
+    assert(labelRows(Dedup.components(graphs(5).toDF("id_a", "id_b"))) === Seq(
+      (None, None), (Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(3L), Some(3L)),
+      (Some(4L), Some(4L))))
+  }
+
+  test("components runs rounds 1 and 2 as one SQL execution") {
+    val s = spark
+    import s.implicits._
+    // star 10-(11,12): round 1 relabels 11 and 12, round 2 changes nothing
+    val star = Seq((10L, 11L), (10L, 12L)).toDF("id_a", "id_b")
+    val (labels, n) = executionsDuring(Dedup.components(star))
+    assert(n === 1)
     assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       Map(10L -> 10L, 11L -> 10L, 12L -> 10L))
+    // path 1-...-8: 7 relabelling rounds and a quiet one
+    val chain = (1L to 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (want, byRounds) = executionsDuring(componentsByRounds(chain))
+    val (got, n8) = executionsDuring(Dedup.components(chain))
+    assert(labelRows(got) === labelRows(want))
+    assert(byRounds === 9)
+    assert(n8 === byRounds - 2)
   }
 
   test("components throws instead of returning truncated labels") {

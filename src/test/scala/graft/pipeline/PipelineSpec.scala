@@ -14,6 +14,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
 
@@ -116,6 +121,17 @@ class PipelineSpec extends SparkSpec {
     try { body; ColumnBridge.waitListenerBusEmpty(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)
     n.get
+  }
+
+  /** Footer metadata of every column chunk in the parquet files of `dir`. */
+  private def columnChunks(dir: String): Seq[ColumnChunkMetaData] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Files.list(Paths.get(dir)).iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .toSeq.flatMap { p =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.toString), conf))
+        try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        finally r.close()
+      }
   }
 
   /** Spark jobs started while `body` runs. */
@@ -273,6 +289,44 @@ class PipelineSpec extends SparkSpec {
     }
     assert(builds == 0)
     assert(!Files.exists(Paths.get(root, "weights", "shift=nominal", "_SUCCESS")))
+  }
+
+  test("checkpoints are zstd parquet with v2 data pages") {
+    val root = Files.createTempDirectory("graft-pipe-codec").toString
+    val pipe = new Pipeline(spark, root)
+    pipe.stage("plain")(wFrame)
+    pipe.stageShifted("weights", wShifts)(sh => sh(wFrame).select("event", "w"))
+    for (d <- Seq("plain") ++ wShifts.map(sh => s"weights/shift=${sh.name}")) {
+      val chunks = columnChunks(s"$root/$d")
+      assert(chunks.nonEmpty, d)
+      assert(chunks.map(_.getCodec.name).toSet === Set("ZSTD"), d)
+      assert(chunks.forall(_.getEncodingStats.usesV2Pages), d)
+    }
+  }
+
+  test("a shift checkpointed as snappy v1 stays complete and reads back beside new shifts") {
+    val root = Files.createTempDirectory("graft-pipe-snappy").toString
+    val pipe = new Pipeline(spark, root)
+    // a nominal shift as checkpoints were written before zstd: snappy, v1 pages
+    val old = s"$root/weights/shift=nominal"
+    val nominal = wFrame.select("event", "w")
+    nominal.write.option("compression", "snappy").parquet(old)
+    Files.write(Paths.get(old, "_GRAFT_VERSION"), "v1".getBytes("UTF-8"))
+    Files.write(Paths.get(old, "_GRAFT_SCHEMA"),
+      ColumnBridge.asNullable(nominal.schema).json.getBytes("UTF-8"))
+    assert(columnChunks(old).map(_.getCodec.name).toSet === Set("SNAPPY"))
+    val built = scala.collection.mutable.ArrayBuffer.empty[String]
+    val outs = pipe.stageShifted("weights", wShifts, "v1") { sh =>
+      built += sh.name; sh(wFrame).select("event", "w")
+    }
+    assert(built === Seq("s_up", "s_down"))
+    assert(columnChunks(s"$root/weights/shift=s_up").map(_.getCodec.name).toSet === Set("ZSTD"))
+    assert(outs("nominal").orderBy("event").collect().map(_.getDouble(1)).toSeq === Seq(10.0, 20.0))
+    // both formats read as one partitioned table
+    val all = spark.read.parquet(s"$root/weights").orderBy("shift", "event").collect()
+      .map(r => (r.getAs[String]("shift"), r.getAs[Double]("w"))).toSeq
+    assert(all === Seq("nominal" -> 10.0, "nominal" -> 20.0, "s_down" -> 9.0, "s_down" -> 18.0,
+      "s_up" -> 11.0, "s_up" -> 22.0))
   }
 
   test("checkpoints read back with the schema Spark infers, without a job on a hit") {
