@@ -373,9 +373,10 @@ object Curation {
     * none of reservoir sampling's order-dependence — any engine, any
     * partitioning, any retry produces the same sample.
     *
-    * Scale: one hash-partition on the group key; within a partition the
-    * per-group top-k needs only a bounded heap (Spark's WindowExec sorts,
-    * which is fine — swap to the TopK aggregate if groups are huge). */
+    * Scale: one hash-partition on the group key; Spark's WindowExec sorts
+    * each group, which is fine for small groups — for huge ones use
+    * [[capPerGroupAgg]], the same cap through the bounded
+    * [[graft.functions.TopK.perGroup]] aggregate. */
   def uniformSamplePerGroup(docs: DataFrame, k: Int, groupCol: String,
                             idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -385,15 +386,16 @@ object Curation {
       .filter(col("sample_rank") <= k)
   }
 
-  /** Per-group document cap via the bounded TopK AGGREGATE — the
-    * huge-group twin [[uniformSamplePerGroup]]'s scaladoc promises: keep
-    * at most `k` documents per group, chosen by a deterministic portable
-    * hash rank (smallest `md5-lower-64(salt|id) mod 2^40`, ties by id
-    * ascending). Where the window form shuffles and sorts EVERY row of a
-    * group to rank it, this formulation partial-aggregates map-side into
-    * a k-slot buffer ([[graft.functions.TopK]]) — the exchange carries at
-    * most k `(double, long)` pairs per (task, group), so a domain with a
-    * billion pages costs the same exchange as one with a hundred. That is
+  /** Per-group document cap via the bounded top-k aggregate
+    * ([[graft.functions.TopK.perGroup]]) — the huge-group twin of
+    * [[uniformSamplePerGroup]]: keep at most `k` documents per group,
+    * chosen by a deterministic portable hash rank (smallest
+    * `md5-lower-64(salt|id) mod 2^40`, ties by id ascending). Where the
+    * window form shuffles and sorts EVERY row of a group to rank it, this
+    * formulation partial-aggregates map-side into a k-slot buffer — the
+    * exchange carries at most k `(double, long)` pairs per (task, group),
+    * so a domain with a billion pages costs the same exchange as one with
+    * a hundred. That is
     * the per-domain-cap shape (RefinedWeb-style curation) at 100 TB.
     *
     * The 2^40 modulus keeps the rank key exactly representable as the
@@ -421,11 +423,8 @@ object Curation {
     val h40 = pmod(
       if (portable) Seeds.portableHash64(key) else xxhash64(key),
       lit(two40))
-    docs.groupBy(col(groupCol))
-      .agg(TopK.topK(h40.cast("double"), col(idCol), k, largest = false).as("__top"))
-      .select(col(groupCol), posexplode(col("__top")).as(Seq("__p", "__kv")))
-      .select(col(groupCol), (col("__p") + 1).cast("long").as("sample_rank"),
-        col("__kv.id").as(idCol))
+    TopK.perGroup(docs, Seq(col(groupCol)), h40.cast("double"), col(idCol), k, largest = false)
+      .select(col(groupCol), col("rnk").cast("long").as("sample_rank"), col("id").as(idCol))
   }
 
   /** Per-document n-gram novelty: the fraction of a document's DISTINCT
@@ -466,8 +465,9 @@ object Curation {
     * Plan: one (doc, term) count aggregation; df piggybacks as a window
     * over the term partition of the SAME pass (no second corpus scan) and
     * the scalar N broadcast-joins. The per-document ranking is the
-    * bounded [[graft.functions.TopKStr]] aggregate, not a `row_number`
-    * window (the q88/q165 pattern, guide §2.5): the window form shuffled
+    * bounded [[graft.functions.TopK.perGroup]] aggregate with the term as
+    * its string id, not a `row_number` window (the q88/q165 pattern,
+    * guide §2.5): the window form shuffled
     * the FULL (doc, term, score) mass by doc and sorted every group,
     * while the aggregate keeps a k-slot buffer per (task, doc) and
     * partial-aggregates map-side — the doc exchange now carries ≤ k rows
@@ -488,13 +488,8 @@ object Curation {
       .crossJoin(broadcast(n))
       .withColumn("idf", round(log(col("__n").cast("double") / col("df")), 9))
       .withColumn("score", col("tf").cast("double") * col("idf"))
-    scored
-      .groupBy(col(idCol))
-      .agg(graft.functions.TopKStr.topKStr(
-        col("score"), col("term"), k, largest = true).as("__top"))
-      .select(col(idCol), posexplode(col("__top")).as(Seq("__i", "__e")))
-      .select(col(idCol), (col("__i") + 1).cast("int").as("rnk"),
-        col("__e.id").as("term"), col("__e.key").as("score"))
+    TopK.perGroup(scored, Seq(col(idCol)), col("score"), col("term"), k)
+      .select(col(idCol), col("rnk"), col("id").as("term"), col("key").as("score"))
   }
 
   /** Concat-and-chunk sequence packing (the GPT-style training-sequence

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TopK
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,8 +8,10 @@ import org.apache.spark.sql.functions._
 /** Similarity search over an embedding column (`array<float>`).
   *
   *   - Brute-force cosine top-k: broadcast the query set, one scan of the
-  *     corpus, window top-k per query. Exact; the right baseline whenever
-  *     the query set is small (the corpus never shuffles).
+  *     corpus, bounded top-k per query ([[TopK.perGroup]]: cos desc, ties
+  *     by neighbor asc, rnk 1..k; the exchange after scoring carries at
+  *     most k rows per (partition, query)). Exact; the right baseline
+  *     whenever the query set is small (the corpus never shuffles).
   *   - Cell-partitioned (IVF-style) top-k: restrict each query's scan to
   *     its coarse cell — here the precomputed `label` column stands in for
   *     the quantizer assignment. At 100 TB this is the difference between
@@ -66,7 +69,8 @@ object Similarity {
     val scored = c0.withColumn("__nv", norm(col(vec)))
       .join(broadcast(queries.withColumn("__nq", norm(col(qvec)))), col(id) =!= col(qid))
       .select(col(qid), col(id).as("neighbor"), pairCos(qvec, vec).as("cos"))
-    topKPerQuery(scored, qid, k)
+    TopK.perGroup(scored, Seq(col(qid)), col("cos"), col("neighbor"), k)
+      .select(col(qid), col("id").as("neighbor"), col("key").as("cos"), col("rnk"))
   }
 
   /** Per-pair cosine with the norms precomputed ONCE per row/query
@@ -76,18 +80,6 @@ object Similarity {
     * rather than once per (row × query). */
   private def pairCos(qvec: String, vec: String): Column =
     safeDiv(dot(col(qvec), col(vec)), col("__nq") * col("__nv"))
-
-  /** Shared top-k tail: the bounded-buffer aggregate (`functions/TopK`)
-    * instead of a row_number window — same output (cos desc, ties by
-    * neighbor asc, rnk 1..k), but the exchange after scoring carries at
-    * most k rows per (partition, query) rather than every scored pair.
-    * Null/NaN scores are excluded (a zero-norm vector has no rank). */
-  private def topKPerQuery(scored: DataFrame, qid: String, k: Int): DataFrame =
-    scored.groupBy(col(qid))
-      .agg(graft.functions.TopK.topK(col("cos"), col("neighbor"), k).as("__top"))
-      .select(col(qid), posexplode(col("__top")).as(Seq("__i", "__e")))
-      .select(col(qid), col("__e.id").as("neighbor"), col("__e.key").as("cos"),
-        (col("__i") + 1).as("rnk"))
 
   /** IVF-style top-k: each query searches only its own cell. `cell` is the
     * coarse-quantizer assignment column present on both sides.
@@ -107,7 +99,8 @@ object Similarity {
       .join(broadcast(queries.withColumn("__nq", norm(col(qvec)))),
         col(cell) === col(qcell) && col(id) =!= col(qid))
       .select(col(qid), col(id).as("neighbor"), pairCos(qvec, vec).as("cos"))
-    topKPerQuery(scored, qid, k)
+    TopK.perGroup(scored, Seq(col(qid)), col("cos"), col("neighbor"), k)
+      .select(col(qid), col("id").as("neighbor"), col("key").as("cos"), col("rnk"))
   }
 
   /** nProbe nearest cells by centroid cosine — the IVF probe list
@@ -146,7 +139,8 @@ object Similarity {
       .join(broadcast(probedQueries.withColumn("__nq", norm(col(qvec)))),
         array_contains(col(probes), col(cell)) && col(id) =!= col(qid))
       .select(col(qid), col(id).as("neighbor"), pairCos(qvec, vec).as("cos"))
-    topKPerQuery(scored, qid, k)
+    TopK.perGroup(scored, Seq(col(qid)), col("cos"), col("neighbor"), k)
+      .select(col(qid), col("id").as("neighbor"), col("key").as("cos"), col("rnk"))
   }
 
   /** Embedding near-duplicate pairs within cells: cosine ≥ threshold.
@@ -462,11 +456,8 @@ object Similarity {
       .join(avgK(bwd, "tgt_id", "__a_tgt"), "tgt_id")
       .withColumn("__margin",
         col("cos") / ((col("__a_src") + col("__a_tgt")) / 2))
-    scored.groupBy(col("src_id"))
-      .agg(graft.functions.TopK.topK(col("__margin"), col("tgt_id"), 1).as("__top"))
-      .select(col("src_id"), explode(col("__top")).as("__e"))
-      .select(col("src_id"), col("__e.id").as("tgt_id"),
-        col("__e.key").as("margin"))
+    TopK.perGroup(scored, Seq(col("src_id")), col("__margin"), col("tgt_id"), 1)
+      .select(col("src_id"), col("id").as("tgt_id"), col("key").as("margin"))
       .filter(col("margin") > threshold)
   }
 }

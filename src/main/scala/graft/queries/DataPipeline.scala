@@ -770,13 +770,11 @@ object DataPipeline {
     // Ordering is identical (key asc, ties id asc — TopKAggSpec pins the
     // window equivalence) and ADC distances are never NaN/null, so the
     // two forms are value-identical here.
-    codes.join(broadcast(qdf), col("neighbor") =!= col("qid"))
+    val scored = codes.join(broadcast(qdf), col("neighbor") =!= col("qid"))
       .withColumn("d", Quantize.adcScore(col("codes"), col("luts"), m = 4))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopK.topK(col("d"), col("neighbor"), 3, largest = false).as("__top"))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__i", "__e")))
-      .select(col("qid"), (col("__i") + 1).cast("int").as("rnk"),
-        col("__e.id").as("neighbor"))
+    graft.functions.TopK.perGroup(scored, Seq(col("qid")), col("d"), col("neighbor"), 3,
+        largest = false)
+      .select(col("qid"), col("rnk"), col("id").as("neighbor"))
       .orderBy("qid", "rnk")
   }
 
@@ -893,7 +891,8 @@ object DataPipeline {
     // last; a group with no scored member (empty texts share h = '')
     // keeps its lowest doc_id, the component label, with a NULL
     // rep_quality (`get`, unlike `getItem`, reads an empty array as NULL
-    // under ANSI mode).
+    // under ANSI mode). Not `TopK.perGroup`: that drops a group with an
+    // empty array, and n_members shares this aggregate.
     val top = get(col("__top"), lit(0))
     comps.join(withH, comps("id") === withH("doc_id"))
       .groupBy(col("component"))

@@ -206,14 +206,11 @@ object Events {
         FROM events WHERE value IS NOT NULL)
       WHERE rnk <= 5
       ORDER BY event_type, rnk""")) { (s, dir) =>
-    Tables.load(s, dir, "events")
-      .filter(col("value").isNotNull)
-      .groupBy("event_type")
-      .agg(graft.functions.TopK.topK(col("value"), col("event_id"), 5).as("top"))
-      .select(col("event_type"), posexplode(col("top")).as(Seq("i", "e")))
-      .select(
-        col("event_type"), (col("i") + 1).cast("long").as("rnk"),
-        col("e.id").as("event_id"), col("e.key").as("value"))
+    val events = Tables.load(s, dir, "events").filter(col("value").isNotNull)
+    graft.functions.TopK.perGroup(events, Seq(col("event_type")), col("value"),
+        col("event_id"), 5)
+      .select(col("event_type"), col("rnk").cast("long").as("rnk"),
+        col("id").as("event_id"), col("key").as("value"))
       .orderBy("event_type", "rnk")
   }
 

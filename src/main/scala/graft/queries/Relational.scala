@@ -207,16 +207,11 @@ object Relational {
     // order-isomorphic to the pair and exactly invertible. Ordering is
     // identical to the window form (key desc, ties packed-id asc;
     // l_extendedprice is a non-null 2dp double — exact in the double key).
-    Tables.load(s, dir, "lineitem")
-      .groupBy("l_returnflag")
-      .agg(graft.functions.TopK.topK(
-        col("l_extendedprice"),
-        col("l_orderkey") * 8 + col("l_linenumber"), 3, largest = true).as("__top"))
-      .select(col("l_returnflag"), posexplode(col("__top")).as(Seq("__i", "__e")))
-      .select(col("l_returnflag"), (col("__i") + 1).cast("int").as("rnk"),
-        expr("__e.id div 8").as("l_orderkey"),
-        pmod(col("__e.id"), lit(8L)).cast("int").as("l_linenumber"),
-        col("__e.key").as("l_extendedprice"))
+    graft.functions.TopK.perGroup(Tables.load(s, dir, "lineitem"), Seq(col("l_returnflag")),
+        col("l_extendedprice"), col("l_orderkey") * 8 + col("l_linenumber"), 3)
+      .select(col("l_returnflag"), col("rnk"), expr("id div 8").as("l_orderkey"),
+        pmod(col("id"), lit(8L)).cast("int").as("l_linenumber"),
+        col("key").as("l_extendedprice"))
       .orderBy("l_returnflag", "rnk")
   }
 

@@ -149,7 +149,9 @@ object EventStream {
     * k-slot buffer, and each micro-batch MERGES its partial buffer into
     * the stored one (the same partial/merge law the batch plan uses
     * map-side). An always-on "top spenders per hour" over a firehose
-    * keeps O(k) state per window, never the event set. */
+    * keeps O(k) state per window, never the event set. Returns the
+    * buffer as one array per window (`win_start`, `top`), so it calls
+    * `TopK.topK`, not the row-per-rank `TopK.perGroup`. */
   def windowedTopK(events: DataFrame, k: Int = 5, ts: String = "ts",
                    keyCol: String = "event_id", valueCol: String = "value",
                    windowLen: String = "1 hour",

@@ -1,65 +1,121 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** TopK aggregate ≡ the window formulation, including ties, small groups,
-  * and the merge path (forced by pre-repartitioning). */
+/** TopK aggregate ≡ the window formulation, for both id types it reads
+  * from its input (bigint: signed order; string: binary order), including
+  * ties, ±0.0 and ±Inf keys, small groups, and the merge/serialize path
+  * (forced by pre-repartitioning). */
 class TopKAggSpec extends SparkSpec {
-  import spark.implicits._
 
-  private def windowTopK(df: org.apache.spark.sql.DataFrame, k: Int, largest: Boolean) = {
+  /** One id type: its Spark type, the seed of its random draw, and the
+    * id of row i. String ids vary in length and case, so key ties
+    * exercise binary order ("Z" < "a", "ab" < "b"). */
+  private case class Ids(tpe: DataType, seed: Int, draw: (Int, scala.util.Random) => Any)
+
+  private val idTypes = Seq(
+    Ids(LongType, 3, (i, _) => i.toLong),
+    Ids(StringType, 7, (i, rnd) => rnd.nextInt(4) match {
+      case 0 => f"t$i%05d"
+      case 1 => s"term_${rnd.nextInt(300)}_$i"
+      case 2 => s"${('a' + rnd.nextInt(26)).toChar}$i"
+      case _ => s"Z$i" // uppercase sorts before lowercase in binary order
+    }))
+
+  private def frame(tpe: DataType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("g", IntegerType), StructField("id", tpe), StructField("v", DoubleType))))
+
+  private def windowTopK(df: DataFrame, k: Int, largest: Boolean) = {
     val ord = if (largest) Seq(col("v").desc, col("id").asc) else Seq(col("v").asc, col("id").asc)
     df.withColumn("rnk", row_number().over(Window.partitionBy("g").orderBy(ord: _*)))
       .filter(col("rnk") <= k)
       .select("g", "rnk", "id", "v")
   }
 
-  private def aggTopK(df: org.apache.spark.sql.DataFrame, k: Int, largest: Boolean) =
+  private def aggTopK(df: DataFrame, k: Int, largest: Boolean) =
     df.groupBy("g")
       .agg(TopK.topK(col("v"), col("id"), k, largest).as("top"))
       .select(col("g"), posexplode(col("top")).as(Seq("i", "e")))
       .select(col("g"), (col("i") + 1).as("rnk"), col("e.id").as("id"), col("e.key").as("v"))
 
+  /** (g, rnk, id, key bits): a Double set would equate -0.0 with 0.0. */
+  private def rows(df: DataFrame) = df.collect().map(r =>
+    (r.getInt(0), r.getInt(1), r.get(2), java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
+
   test("matches the window formulation on random data with ties, both directions") {
-    val rnd = new scala.util.Random(3)
-    // duplicate v values force tie-breaks; 17 groups, some smaller than k.
-    // -0.0 and 0.0 are the smallest keys: Spark's sort ties them
-    // (SQLOrderingUtil.compareDoubles), and so must TopK
-    val df = Seq.tabulate(5000)(i =>
-      (rnd.nextInt(17), i.toLong, rnd.nextInt(41) match {
-        case 40 => -0.0
-        case n => n.toDouble / 4
-      }))
-      .toDF("g", "id", "v")
-      .repartition(13) // force the partial-buffer merge path
-    // compare keys by bit pattern: a Double set equates -0.0 with 0.0
-    def bits(rows: Array[(Int, Int, Long, Double)]) =
-      rows.map { case (g, r, id, v) => (g, r, id, java.lang.Double.doubleToRawLongBits(v)) }.toSet
-    for (largest <- Seq(true, false)) {
-      val want = bits(windowTopK(df, 7, largest).as[(Int, Int, Long, Double)].collect())
-      val got = bits(aggTopK(df, 7, largest).as[(Int, Int, Long, Double)].collect())
-      assert(got === want, s"largest=$largest")
-      assert(got.nonEmpty)
+    for (ids <- idTypes) {
+      val rnd = new scala.util.Random(ids.seed)
+      // duplicate v values force id tie-breaks; 17 groups, some smaller
+      // than k. -0.0 ties 0.0, as in Spark's sort
+      // (SQLOrderingUtil.compareDoubles), and so must TopK; ±Inf are the
+      // extreme finite-ordered keys
+      val df = frame(ids.tpe, Seq.tabulate(5000) { i =>
+        val id = ids.draw(i, rnd)
+        Row(rnd.nextInt(17), id, rnd.nextInt(43) match {
+          case 40 => -0.0
+          case 41 => Double.PositiveInfinity
+          case 42 => Double.NegativeInfinity
+          case n => n.toDouble / 4
+        })
+      }).repartition(13) // force the partial-buffer merge + serialize path
+      for (largest <- Seq(true, false)) {
+        val want = rows(windowTopK(df, 7, largest))
+        val got = rows(aggTopK(df, 7, largest))
+        assert(got === want, s"${ids.tpe.simpleString} largest=$largest")
+        assert(got.nonEmpty)
+      }
     }
   }
 
   test("groups smaller than k return all rows; null/NaN keys are skipped") {
-    val df = Seq(
-      (1, 1L, Some(2.0)), (1, 2L, Some(1.0)),
-      (2, 3L, None), (2, 4L, Some(Double.NaN)), (2, 5L, Some(9.0))
-    ).toDF("g", "id", "v")
-    val got = aggTopK(df, 5, largest = true)
-      .as[(Int, Int, Long, Double)].collect().toSet
-    assert(got === Set((1, 1, 1L, 2.0), (1, 2, 2L, 1.0), (2, 1, 5L, 9.0)))
+    // per id type: ids a..e, then four ids tied on the key, listed out of
+    // order (the expected rank order is the type's own)
+    val cases = Seq(
+      (LongType, Seq[Any](1L, 2L, 3L, 4L, 5L), Seq[Any](7L, -3L, 10L, 0L), Seq[Any](-3L, 0L, 7L, 10L)),
+      (StringType, Seq[Any]("a", "b", "c", "d", "e"), Seq[Any]("b", "ab", "Z", "a"),
+        Seq[Any]("Z", "a", "ab", "b")))
+    for ((tpe, abcde, tied, tiedOrder) <- cases) {
+      val Seq(a, b, c, d, e) = abcde
+      val df = frame(tpe, Seq(
+        Row(1, a, 2.0), Row(1, b, 1.0),
+        Row(2, c, null), Row(2, d, Double.NaN), Row(2, null, 5.0), Row(2, e, 9.0)) ++
+        tied.map(Row(3, _, 1.0)))
+      val want = (Seq((1, 1, a, 2.0), (1, 2, b, 1.0), (2, 1, e, 9.0)) ++
+        tiedOrder.zipWithIndex.map { case (id, i) => (3, i + 1, id, 1.0) })
+        .map { case (g, r, id, v) => (g, r, id, java.lang.Double.doubleToRawLongBits(v)) }.toSet
+      assert(rows(aggTopK(df, 5, largest = true)) === want, tpe.simpleString)
+    }
+  }
+
+  test("buffered ids are defensive copies — operator row-buffer reuse cannot corrupt them") {
+    // many rows per task with distinct string ids: if the aggregate kept
+    // references into the operator's reused row buffer, later rows would
+    // overwrite earlier buffered ids and the output would repeat the last
+    // id instead of the true top-k set
+    val df = frame(StringType, (1 to 10000).map(i => Row(i % 5, s"id_$i", (i % 97).toDouble)))
+      .repartition(3)
+    val got = aggTopK(df, 4, largest = true).collect().map(_.getString(2))
+    assert(got.distinct.length == got.length, s"duplicated ids: ${got.mkString(",")}")
+    val want = windowTopK(df, 4, largest = true).collect().map(_.getString(2)).toSet
+    assert(got.toSet === want)
   }
 
   test("the plan partial-aggregates map-side (ObjectHashAggregate, partial_)") {
-    val df = (1 to 100).map(i => (i % 3, i.toLong, i.toDouble)).toDF("g", "id", "v")
-    val p = df.groupBy("g").agg(TopK.topK(col("v"), col("id"), 3).as("t"))
-      .queryExecution.executedPlan.toString
-    assert(p.contains("ObjectHashAggregate") || p.contains("SortAggregate"), p)
-    assert(p.contains("partial_graft_topk") || p.contains("partial_"), p)
+    for (ids <- idTypes) {
+      val rnd = new scala.util.Random(ids.seed)
+      val df = frame(ids.tpe, (1 to 100).map(i => Row(i % 3, ids.draw(i, rnd), i.toDouble)))
+      val top = df.groupBy("g").agg(TopK.topK(col("v"), col("id"), 3).as("t"))
+      val p = top.queryExecution.executedPlan.toString
+      assert(p.contains("ObjectHashAggregate") || p.contains("SortAggregate"), p)
+      assert(p.contains("partial_graft_topk"), p)
+      // the buffer's id field keeps the input's id type
+      assert(top.schema("t").dataType === ArrayType(StructType(Seq(
+        StructField("key", DoubleType), StructField("id", ids.tpe))), containsNull = false))
+    }
   }
 }

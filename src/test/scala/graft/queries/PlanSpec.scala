@@ -295,8 +295,8 @@ class PlanSpec extends SparkSpec {
 
   test("q89: per-document ranking is the bounded string-id TopK; only the df window remains") {
     val p = plan("q89_tfidf_topk")
-    assert(p.contains("partial_graft_topk_str"),
-      s"q89: ranking regressed from the TopKStr aggregate:\n$p")
+    assert(p.contains("partial_graft_topk"),
+      s"q89: ranking regressed from the bounded TopK aggregate:\n$p")
     // exactly ONE window node: the term-partition df count that shares
     // the tf pass (the q167 one-scan rationale); the doc-partition rank
     // window must stay gone
