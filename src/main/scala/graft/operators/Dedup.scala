@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Fixpoint
 import graft.functions.{Seeds, Text}
 
 /** A dedup result plus the persisted intermediates backing it. The pair
@@ -384,14 +385,10 @@ object Dedup {
     *
     * Min-label propagation: every node repeatedly takes the minimum id
     * among itself and its neighbors until a fixpoint; the round count is
-    * the graph diameter. Round 1 needs no labels — a node's neighbors
-    * still carry their own ids, so its label is least(id, min(dst)) over
-    * its edges — and runs in one plan with round 2, which joins the
-    * edges to the round-1 labels and counts its changes while it runs.
-    * So a call is ONE SQL execution when round 2 changes nothing (stars
-    * and cliques, i.e. most near-dup graphs) and one more per further
-    * round. `localCheckpoint` truncates the plan lineage each execution —
-    * without it the loop compiles an ever-growing DAG.
+    * the graph diameter. The rounds run in [[graft.core.Fixpoint]], one
+    * SQL execution each, except that rounds 1 and 2 share the first: so
+    * a call is ONE execution when round 2 changes nothing (stars and
+    * cliques, i.e. most near-dup graphs).
     *
     * Returns (id, component) with component = min id in the cluster; docs
     * absent from `pairs` are their own components and are not emitted. A
@@ -408,53 +405,39 @@ object Dedup {
     val edges = pairs.select(col(a).as("src"), col(b).as("dst"))
       .union(pairs.select(col(b).as("src"), col(a).as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // a round's tail: a label changes iff its smallest neighbor label `nmin`
-    // is smaller; the round counts its changes (and `counts`) while it runs,
-    // so each round is one execution
-    def settle(joined: DataFrame, counts: Column*): (DataFrame, Map[String, Any]) = {
-      val obs = new Observation()
-      val next = joined
-        .observe(obs, count(when(col("nmin") < col("component"), lit(1))).as("changed"),
-          counts: _*)
-        .select(col("id"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
-        .localCheckpoint()
-      (next, obs.get)
-    }
-    // Rounds 1 and 2 in one execution. Round 1 needs no labels: a node's
-    // neighbors still carry their own ids, so its label is least(id, min(dst)).
-    // Round 2 joins each edge to its dst's round-1 label and groups by src,
-    // whose rows also give src's own round-1 label. Min skips a null dst,
-    // which the later rounds' joins never match either; a null id gets a
-    // null label, as in those rounds. The join is a merge join: round 1 is
-    // already partitioned by its key, and the edges' shuffle runs beside
-    // it, where a broadcast of round 1 would be one more serial job.
+    // a label changes iff its smallest neighbor label `nmin` is smaller;
+    // the change is counted before `relabel` drops `nmin`
+    val changed = count(when(col("nmin") < col("component"), lit(1))).as("changed")
+    val relabel: DataFrame => DataFrame = _.select(col("id"),
+      least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
+    // Round 1 needs no labels: a node's label is least(id, min(dst)). Round 2
+    // joins each edge to its dst's round-1 label and groups by src, whose rows
+    // also give src's own round-1 label. Min skips a null dst, which later
+    // joins never match either; a null id gets a null label. The merge join
+    // reuses round 1's partitioning, where a broadcast would be a serial job.
     val round1 = edges.groupBy("src").agg(min("dst").as("m"))
       .select(col("src").as("dst"), least(col("src"), col("m")).as("c"))
-    val (second, seen) = settle(
-      edges.join(round1.hint("merge"), Seq("dst"), "left")
-        .groupBy(col("src").as("id")).agg(min("dst").as("m"), min("c").as("nmin"))
-        .select(col("id"),
-          when(col("id").isNotNull, least(col("id"), col("m"))).as("component"),
-          when(col("id").isNotNull, col("nmin")).as("nmin")),
-      count(when(col("component") < col("id"), lit(1))).as("changed1"))
-    var labels = second
-    var changed = seen(if (maxIters == 1) "changed1" else "changed").asInstanceOf[Long]
-    var it = 2
-    while (changed > 0 && it < maxIters) {
-      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src")).agg(min("component").as("nmin"))
-      val (next, r) = settle(labels.join(neighborMin, labels("id") === col("src"), "left")
-        .select(labels("id"), col("component"), col("nmin")))
-      labels = next
-      changed = r("changed").asInstanceOf[Long]
-      it += 1
+    // Fixpoint round 1 is rounds 1 and 2 (it reads no state), round r is r + 1
+    val (labels, left) = Fixpoint.iterate(edges, math.max(1, maxIters - 1), finish = relabel) {
+      case (_, 1) =>
+        (edges.join(round1.hint("merge"), Seq("dst"), "left")
+          .groupBy(col("src").as("id")).agg(min("dst").as("m"), min("c").as("nmin"))
+          .select(col("id"),
+            when(col("id").isNotNull, least(col("id"), col("m"))).as("component"),
+            when(col("id").isNotNull, col("nmin")).as("nmin")),
+          Some(if (maxIters > 1) changed
+            else count(when(col("component") < col("id"), lit(1))).as("changed1")))
+      case (prev, _) =>
+        val neighborMin = edges.join(prev, edges("dst") === prev("id"))
+          .groupBy(col("src")).agg(min("component").as("nmin"))
+        (prev.join(neighborMin, prev("id") === col("src"), "left")
+          .select(prev("id"), col("component"), col("nmin")), Some(changed))
     }
     edges.unpersist()
-    if (changed > 0)
+    if (left.get > 0)
       throw new IllegalStateException(
         s"components() did not converge in $maxIters iterations " +
-          s"($changed labels still changing); raise maxIters")
+          s"(${left.get} labels still changing); raise maxIters")
     labels
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -10,9 +11,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: each iteration is ONE key-shuffle (contributions grouped
   * by destination); ranks and degrees ride a join on the edge's source.
   * At 100 TB of edges both joins hash-partition on the same key, and AQE
-  * handles the power-law skew of hub nodes. `localCheckpoint` every few
-  * iterations truncates the growing lineage exactly like
-  * `Dedup.components` does.
+  * handles the power-law skew of hub nodes. The round loops of PageRank,
+  * label propagation and BFS run in [[graft.core.Fixpoint]].
   *
   * Determinism: ranks are FIXED-POINT scaled longs (default 10^12), all
   * updates integer floor-division — so sums are order-independent and the
@@ -36,8 +36,7 @@ object Graph {
     * (one `node` column — the way to rank isolated nodes, which no edge
     * can name), otherwise the distinct union of `src` and `dst`, so
     * sink-only nodes hold rank and absorb the contributions pointed at
-    * them (before r5 they derived from `src` alone, silently discarding
-    * that mass — the r4 verdict's leak). With an explicit `nodeTable`
+    * them. With an explicit `nodeTable`
     * the walk runs on the NODE-INDUCED SUBGRAPH: edges with either
     * endpoint outside the table are removed BEFORE out-degrees are
     * computed, so an in-table neighbor receives 1/deg' of the in-table
@@ -57,10 +56,10 @@ object Graph {
                      scale: Long = 1000000000000L,
                      nodeTable: Option[DataFrame] = None,
                      conserveMass: Boolean = false): DataFrame = {
-    require(iterations >= 1 && iterations <= 50)
-    // materialize the loop invariants ONCE: without this every iteration
+    require(iterations >= 1 && iterations <= 50,
+      s"pageRankScaled: iterations must be in [1, 50]: $iterations")
+    // materialize the loop invariants ONCE: otherwise every iteration
     // re-derives the edge list from source (scan + any upstream distinct)
-    // — 3 iterations = 4 redundant corpus passes
     val e = nodeTable match {
       case None => edges.localCheckpoint()
       case Some(nt) =>
@@ -84,19 +83,15 @@ object Graph {
     require(n > 0, "pageRankScaled: empty node set (no edges and no " +
       "nodeTable rows) — nothing to rank")
     val base = ((dampDen - dampNum) * (scale / n)) / dampDen
-    var ranks = nodes.withColumn("rank_scaled", lit(scale / n))
-    for (i <- 1 to iterations) {
-      // `div` (not `/`): Spark's `/` on longs is DOUBLE division, whose
-      // rounding could differ from the oracle's integer `//` near ties —
-      // integral div is exact and both engines floor positives identically.
-      // Join order (guide §3): ranks⋈deg FIRST — both node-width, and the
-      // per-source contribution is divided ONCE per source instead of once
-      // per edge — then one edge-width join attaches it to dst. The
-      // previous order (e⋈ranks, then ⋈deg on src) pushed EDGE-width rows
-      // through the second join, paying an extra |E|-row SMJ sort per
-      // iteration. Inner-join semantics identical: every edge's src has a
-      // deg row by construction (deg is derived from e), and rank rows
-      // without out-edges drop in both orders.
+    // conserveMass reads `ranks` twice per round (contrib + dangling scalar),
+    // so its plan doubles per round: checkpoint every round there, else every 5th
+    val init = nodes.withColumn("rank_scaled", lit(scale / n))
+    Fixpoint.iterate(init, iterations, if (conserveMass) 1 else 5) { (ranks, _) =>
+      // `div` (not `/`): Spark's `/` on longs is DOUBLE division; integral
+      // div is exact and floors positives like the oracle's `//`. Join
+      // order: ranks⋈deg FIRST (both node-width, one division per source),
+      // then one edge-width join attaches it to dst. Every edge's src has a
+      // deg row (deg derives from e); ranks without out-edges drop.
       val perSrc = ranks.join(deg, ranks("node") === deg("src"))
         .select(col("src"), expr("rank_scaled div deg").as("__c"))
       val contrib = e
@@ -117,14 +112,9 @@ object Graph {
           gathered.crossJoin(broadcast(dangling))
             .select(col("node"), (col("s") + expr(s"__d div $n")).as("s"))
         }
-      ranks = redistributed.select(col("node"),
-        expr(s"$base + ($dampNum * s) div $dampDen").as("rank_scaled"))
-      // conserveMass references `ranks` twice per iteration (contrib +
-      // dangling scalar), so the lazy plan tree doubles per step —
-      // truncate lineage every iteration there, every 5 otherwise
-      if (conserveMass || i % 5 == 0) ranks = ranks.localCheckpoint()
-    }
-    ranks
+      (redistributed.select(col("node"),
+        expr(s"$base + ($dampNum * s) div $dampDen").as("rank_scaled")), None)
+    }._1
   }
 
   /** Triangle count on an undirected simple graph, `edges(a, b)` with
@@ -289,44 +279,31 @@ object Graph {
     * (dst, label)-grouped count with map-side partial aggregation, and
     * one per-dst argmax via `max(struct(cnt, -label))` — a map-side
     * combinable aggregate, never a per-node window. Hub skew is AQE's
-    * skew-join case. The edge invariant persists SERIALIZED with disk
-    * spill (an unevictable deserialized checkpoint of a 100×-scale edge
-    * set starves execution memory — caught by the sf10 rehearsal);
-    * node-width labels localCheckpoint each round to bound the
-    * iterative lineage. k rounds shuffle label-width rows k times,
-    * never adjacency lists. */
+    * skew-join case. The edges persist SERIALIZED with disk spill (a
+    * deserialized checkpoint of a 100×-scale edge set starves execution
+    * memory — caught by the sf10 rehearsal); [[graft.core.Fixpoint]]
+    * checkpoints the node-width labels every round. */
   def labelPropagation(edges: DataFrame, iterations: Int): DataFrame = {
-    require(iterations >= 1 && iterations <= 50)
+    require(iterations >= 1 && iterations <= 50,
+      s"labelPropagation: iterations must be in [1, 50]: $iterations")
     val und = edges.select(col("a"), col("b"))
-    // the big loop invariant: persist SERIALIZED with disk spill, not
-    // localCheckpoint — checkpointed deserialized edge blocks at sf10
-    // scale (180M sym rows of the co-order graph) pin gigabytes of
-    // unevictable storage and starve execution memory
-    // (UNABLE_TO_ACQUIRE_MEMORY, caught live by the r8 rehearsal); the
-    // serialized columnar form is ~10× smaller and spills freely. Its
-    // lineage is one join+distinct — shallow enough that truncation
-    // buys nothing.
+    // SERIALIZED, not checkpointed (see above): ~10× smaller, spills
+    // freely, and one union+distinct of lineage is not worth truncating
     val sym = und.select(col("a").as("s"), col("b").as("d"))
       .unionAll(und.select(col("b").as("s"), col("a").as("d")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // every node appears as some `d` (sym holds both directions of every
-    // edge), so the per-round argmax covers the full node set — no
-    // carry join needed
-    var labels = sym.select(col("s").as("id")).distinct()
+    val init = sym.select(col("s").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
-    for (_ <- 1 to iterations) {
-      labels = sym
-        .join(labels.select(col("id").as("s"), col("lbl")), "s")
+    val (labels, _) = Fixpoint.iterate(init, iterations) { (prev, _) =>
+      (sym
+        .join(prev.select(col("id").as("s"), col("lbl")), "s")
         .groupBy(col("d").as("id"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
         // argmax by (count, then smallest label): max over (cnt, -lbl)
         .groupBy("id")
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
-        .select(col("id"), (-col("m.nl")).as("lbl"))
-        // labels are node-width (tiny next to edges) — checkpointing
-        // them each round is what bounds the iterative lineage
-        .localCheckpoint()
+        .select(col("id"), (-col("m.nl")).as("lbl")), None)
     }
     sym.unpersist(false)
     labels.select(col("id"), col("lbl").as("community"))
@@ -335,30 +312,24 @@ object Graph {
   /** Multi-source BFS: minimum hop count from any seed, bounded by
     * `maxHops`. Returns (node, hops) for every reached node.
     *
-    * Each hop is one equi-join frontier expansion followed by an
-    * anti-join against the visited set — the frontier DEDUPLICATES per
-    * hop, so work per level is O(|reachable frontier|·avg-degree). That
-    * is the scale divide versus a naive recursive-CTE evaluation, which
-    * enumerates PATHS (exponential in dense graphs) rather than nodes:
-    * level-synchronous BFS with frontier dedup is how 100 TB edge lists
-    * stay tractable. `localCheckpoint` per hop truncates the growing
-    * lineage (same hygiene as [[pageRankScaled]]); hub-vertex skew in
-    * the expansion join is AQE's skew-split case. */
+    * Hop h expands the visited rows of hop h − 1 with one equi-join and
+    * anti-joins the result against the visited set — the frontier
+    * DEDUPLICATES per hop, so work per level is O(|frontier|·avg-degree),
+    * where a recursive CTE enumerates PATHS (exponential in dense graphs).
+    * The hops run in [[graft.core.Fixpoint]], one SQL execution each that
+    * also counts the hop's new rows; the search stops after a hop that
+    * finds none. Hub skew in the expansion join is AQE's skew-split case. */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 1 && maxHops <= 30)
+    require(maxHops >= 1 && maxHops <= 30, s"bfs: maxHops must be in [1, 30]: $maxHops")
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    var visited = seeds.select(col("node"), lit(0).as("hops")).distinct()
-      .localCheckpoint()
-    var frontier = visited
-    var hop = 0
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      val expanded = frontier.join(e, frontier("node") === e("src"))
+    val init = seeds.select(col("node"), lit(0).as("hops")).distinct().localCheckpoint()
+    Fixpoint.iterate(init, maxHops) { (visited, hop) =>
+      val reached = visited.filter(col("hops") === hop - 1)
+        .join(e, col("node") === e("src"))
         .select(col("dst").as("node")).distinct()
-      frontier = expanded.join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop)).localCheckpoint()
-      visited = visited.unionAll(frontier).localCheckpoint()
-    }
-    visited
+        .join(visited.select("node"), Seq("node"), "left_anti")
+        .withColumn("hops", lit(hop))
+      (visited.unionAll(reached), Some(count(when(col("hops") === hop, lit(1)))))
+    }._1
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.functions.Text
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -447,22 +446,6 @@ class DataPipelineSpec extends SparkSpec {
     }
     if (changed > 0) throw new IllegalStateException(s"$changed labels still changing")
     labels
-  }
-
-  /** Root SQL executions started while `body` runs. */
-  private def executionsDuring[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-          if st.rootExecutionId.forall(_ == st.executionId) => n.incrementAndGet(): Unit
-        case _ =>
-      }
-    }
-    ColumnBridge.waitListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { val r = body; ColumnBridge.waitListenerBusEmpty(spark.sparkContext); (r, n.get) }
-    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def labelRows(df: DataFrame): Seq[(Option[Long], Option[Long])] =

@@ -11,6 +11,10 @@ class GraphSpec extends SparkSpec {
     (1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)
   ).toDF("src", "dst")
 
+  // directed chain 1→2→3→4→5 plus island 9→10
+  private def chainEdges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (9L, 10L))
+    .toDF("src", "dst")
+
   test("pageRankScaled matches the hand-unrolled fixed-point update") {
     val out = Graph.pageRankScaled(pathEdges, iterations = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -124,6 +128,21 @@ class GraphSpec extends SparkSpec {
       Graph.pageRankScaled(edges, 1,
         nodeTable = Some(Seq.empty[Long].toDF("node"))))
     assert(e.getMessage.contains("empty node set"))
+    for (bad <- Seq(0, 51)) {
+      val r = intercept[IllegalArgumentException](Graph.pageRankScaled(edges, bad))
+      assert(r.getMessage.contains(s"iterations must be in [1, 50]: $bad"))
+    }
+  }
+
+  test("pageRankScaled checkpoints inside the loop only at its cadence") {
+    // 4 executions before the loop: the edge, node and degree checkpoints
+    // and the node count; then every 5th round, or every round under
+    // conserveMass
+    for ((iters, conserve, inLoop) <- Seq((3, false, 0), (10, false, 2), (3, true, 3))) {
+      val (_, n) = executionsDuring(
+        Graph.pageRankScaled(pathEdges, iters, conserveMass = conserve))
+      assert(n === 4 + inLoop, s"iterations $iters, conserveMass $conserve")
+    }
   }
 
   test("pageRankScaled: on a symmetrized graph union(src,dst) ≡ src-only (q122 unchanged)") {
@@ -225,10 +244,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("bfs: min hops on a chain, unreachable components absent") {
-    // directed chain 1→2→3→4→5 plus island 9→10
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (9L, 10L))
-      .toDF("src", "dst")
-    val out = Graph.bfs(edges, Seq(1L).toDF("node"), maxHops = 3)
+    val out = Graph.bfs(chainEdges, Seq(1L).toDF("node"), maxHops = 3)
       .as[(Long, Int)].collect().toMap
     assert(out === Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3)) // 5 beyond cap, island absent
   }
@@ -250,6 +266,22 @@ class GraphSpec extends SparkSpec {
     val out = Graph.bfs(edges, Seq(1L).toDF("node"), maxHops = 30)
       .as[(Long, Int)].collect().toMap
     assert(out === Map(1L -> 0, 2L -> 1))
+    for (bad <- Seq(0, 31)) {
+      val e = intercept[IllegalArgumentException](Graph.bfs(edges, Seq(1L).toDF("node"), bad))
+      assert(e.getMessage.contains(s"maxHops must be in [1, 30]: $bad"))
+    }
+  }
+
+  test("bfs runs one SQL execution per hop") {
+    // 2 executions before the loop (the edge list and the seed set), then
+    // one per hop run, the quiet hop that ends the search included
+    val (out, n3) = executionsDuring(Graph.bfs(chainEdges, Seq(1L).toDF("node"), maxHops = 3))
+    assert(n3 === 2 + 3)
+    assert(out.count() === 4)
+    // hop 1 reaches node 2, hop 2 reaches nothing
+    val (_, n2) = executionsDuring(
+      Graph.bfs(Seq((1L, 2L)).toDF("src", "dst"), Seq(1L).toDF("node"), maxHops = 30))
+    assert(n2 === 2 + 2)
   }
 
   test("bfs fuzz-matches a sequential BFS on random sparse digraphs") {
@@ -300,6 +332,21 @@ class GraphSpec extends SparkSpec {
       val got = Graph.labelPropagation(edges.toDF("a", "b"), iters)
         .as[(Long, Long)].collect().toMap
       assert(got === lbl, s"trial $trial (n=$n iters=$iters edges=$edges)")
+    }
+    for (bad <- Seq(0, 51)) {
+      val e = intercept[IllegalArgumentException](
+        Graph.labelPropagation(Seq((1L, 2L)).toDF("a", "b"), bad))
+      assert(e.getMessage.contains(s"iterations must be in [1, 50]: $bad"))
+    }
+  }
+
+  test("labelPropagation runs one SQL execution per round") {
+    // the symmetrized edges persist lazily, so the rounds are the only
+    // executions: each one settles its labels
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
+    for (iters <- Seq(1, 3)) {
+      val (_, n) = executionsDuring(Graph.labelPropagation(path, iters))
+      assert(n === iters, s"iterations $iters")
     }
   }
 }
