@@ -21,9 +21,9 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
       } finally {
-        // operators that persist intermediates must not leak them into
-        // later queries — accumulated caches turn into GC pauses that
-        // land on whichever query runs next
+        // backstop: no registry query leaves a cached relation (PlanSpec's
+        // registry sweep checks it), but one that did would turn into GC
+        // pauses landing on whichever query runs next
         spark.catalog.clearCache()
       }
       (System.nanoTime() - t0) / 1e9

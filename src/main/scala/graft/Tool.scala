@@ -21,7 +21,7 @@ object Tool {
   private val usage: String =
     """usage: graft.Tool <subcommand> args...
       |  profile <sfDir> <nRuns> <query,query,...>  per-stage metrics of each query's last run
-      |  plans <sfDir> <outDir> [query,query,...]   formatted physical plan per query (default: bench set)
+      |  plans <sfDir> <outDir> [query,query,...]   formatted plan per query and per build execution (default: bench set)
       |  audit <sfDir> <outFile>                    plan-shape TSV of every registry query
       |  scale <communities|ccsampled> <dataDir>    timed scale run of an all-pairs-oracle composite
       |  gen <outDir> <sf> [filesPerTable]          synthetic fixtures (GenData)""".stripMargin
@@ -59,7 +59,7 @@ object Tool {
       def timed(): Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        try (System.nanoTime() - t0) / 1e9 finally spark.catalog.clearCache()
+        (System.nanoTime() - t0) / 1e9
       }
       timed() // untimed warmup (codegen + JIT), as in Bench
       val walls = (1 to runs).map { _ => metrics.reset(); timed() }
@@ -74,29 +74,24 @@ object Tool {
     }
   }
 
-  /** Pre-checkpoint handles: the inner frame a query builds before a
-    * `localCheckpoint` truncates its lineage. The checkpointed query's own
-    * plan shows only the scan of the checkpoint, not the build it hides. */
-  private val inner: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q42_calibrator_shifts_inner" ->
-      ((s, dir) => graft.queries.Physics.q42Inner(s, dir)),
-    "q183_prototypicality_prune_inner" ->
-      ((s, dir) => graft.operators.Similarity.prototypicalityRanked(
-        graft.core.Tables.load(s, dir, "embeddings"), hardest = true,
-        cellCol = "label", idCol = "vec_id", vecCol = "embedding")))
-
-  /** `<outDir>/<query>.txt` per query or `inner` handle: the FORMATTED plan
-    * before execution. Broadcast choices follow file-size statistics, so
-    * plans of two scale factors diff with `tools/plandiff.py`. */
+  /** `<outDir>/<query>.txt` per query: the FORMATTED plan before
+    * execution. Broadcast choices follow file-size statistics, so plans of
+    * two scale factors diff with `tools/plandiff.py`. A query whose build
+    * runs SQL executions (eager checkpoints: the plan above shows only their
+    * scans) also gets `<query>.build<N>.txt`, the executed plan of its N-th. */
   private def plans(spark: SparkSession, sfDir: String, outDir: String, names: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(outDir))
+    val formatted = ExplainMode.fromString("formatted")
     names.foreach { n =>
-      val fn = inner.getOrElse(n, Registry.queries(n))
       val plan =
-        try fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
-        catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
+        try {
+          val (df, builds) = PlanShape.executionsDuring(spark)(Registry.queries(n)(spark, sfDir))
+          builds.zipWithIndex.foreach { case (qe, i) =>
+            Files.writeString(Paths.get(outDir, s"$n.build${i + 1}.txt"), qe.explainString(formatted))
+          }
+          df.queryExecution.explainString(formatted)
+        } catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
       Files.writeString(Paths.get(outDir, s"$n.txt"), plan)
-      spark.catalog.clearCache()
     }
     println(s"[plans] ${names.size} plans -> $outDir")
   }
@@ -119,7 +114,6 @@ object Tool {
           s.count[CartesianProductExec], s.windows.size + s.count[WindowGroupLimitExec],
           s.globalWindows.size, s.count[GenerateExec], s.scans.size, s.count[SortExec]).mkString("\t")
       } catch { case e: Throwable => s"${d.name}\tPLAN_FAILED: ${e.getMessage.take(80)}" }
-      finally spark.catalog.clearCache()
     }
     Files.writeString(Paths.get(out), (header +: rows).mkString("", "\n", "\n"))
     println(s"[audit] ${rows.size} queries -> $out")

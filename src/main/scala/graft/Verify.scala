@@ -24,8 +24,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        // operators that persist intermediates (dedup passes) must not
-        // leak caches across the ~70-query sweep — same hygiene as Bench
+        // backstop: no registry query leaves a cached relation, but one
+        // that did must not leak across the sweep — same as Bench
         spark.catalog.clearCache()
       }
     }

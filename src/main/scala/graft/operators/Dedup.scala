@@ -6,16 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.core.Fixpoint
 import graft.functions.{Seeds, Text}
 
-/** A dedup result plus the persisted intermediates backing it. The pair
-  * plans cache their shingle/signature tables (consumed by several plan
-  * branches); those caches must outlive every action on `pairs` but should
-  * not outlive the RESULT — `materialize` scopes them to one consumption,
-  * `unpersistCaches` releases them explicitly for multi-action use. */
-final class DedupRun(val pairs: DataFrame, caches: Seq[DataFrame]) {
-  /** Run `f` (which should materialize `pairs`), then drop the caches. */
-  def materialize[T](f: DataFrame => T): T =
-    try f(pairs) finally unpersistCaches()
-  def unpersistCaches(): Unit = caches.foreach(_.unpersist(false))
+/** Near-dup pairs of [[Dedup.minhashLshRun]], [[Dedup.simhashRun]] and
+  * [[Dedup.incrementalNearDupNewRun]]. Their shared tables are local
+  * checkpoints that nobody has to release, so this wrapper holds nothing
+  * but `pairs`; it stays only because the perfbench runner calls
+  * `minhashLshRun(...).materialize`. */
+final class DedupRun(val pairs: DataFrame) {
+  def materialize[T](f: DataFrame => T): T = f(pairs)
 }
 
 /** Deduplication operators for training-data pipelines, each designed for
@@ -89,15 +86,14 @@ object Dedup {
     * [[minhashLshRun]] hot-bucket guard, applied per side). Batch
     * documents with no shingles (shorter than the gram width) are kept
     * trivially, mirroring the pair builders. The batch and corpus
-    * shingle caches are consumed by the band build AND the verify joins;
-    * `unpersistCaches` / `materialize` releases them, as does the
-    * harnesses' per-query `catalog.clearCache()`. */
+    * shingle tables, read by the band build AND the verify joins, are
+    * checkpointed by [[shingleHashes]]. */
   def incrementalNearDupNewRun(batch: DataFrame, corpus: DataFrame,
                                id: String = "doc_id", text: String = "text",
                                shingleN: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
                                threshold: Double = 0.8, maxBucket: Long = 0L): DedupRun = {
-    val (bCache, bsh) = shingleHashes(batch, id, text, shingleN)
-    val (cCache, csh) = shingleHashes(corpus, id, text, shingleN)
+    val bsh = shingleHashes(batch, id, text, shingleN)
+    val csh = shingleHashes(corpus, id, text, shingleN)
     val bb = bands(bsh, k, rowsPerBand, maxBucket)
     val cb = bands(csh, k, rowsPerBand, maxBucket)
 
@@ -116,7 +112,7 @@ object Dedup {
     val kept = batch.select(col(id))
       .join(hitCorpus, Seq(id), "left_anti")
       .join(dominated, Seq(id), "left_anti")
-    new DedupRun(kept, Seq(bCache, cCache))
+    new DedupRun(kept)
   }
 
   /** Exact-dedup projection: keep only the representative row per content
@@ -126,34 +122,30 @@ object Dedup {
     docs.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** `(cache, shingled)`: `cache` holds (`__id`, `__bh` = one xxhash64 per
-    * distinct `shingleN`-gram) for every document; `shingled` is its rows
-    * with at least one shingle.
+  /** (`__id`, `__bh` = one xxhash64 per distinct `shingleN`-gram) of
+    * every document with at least one shingle.
     *
     * The round-robin repartition spreads the per-document tokenizing and
     * hashing over every core: a compact parquet input (one row group)
     * would otherwise pin the whole corpus to one task. The table is read
     * by several plan branches (banding and both verify sides), so it is
-    * persisted and shingling runs once per document, not once per
-    * consumer. MEMORY_AND_DISK: at corpus scale the table spills instead
-    * of recomputing (same choice as Spark ML's MinHashLSHModel); in a
-    * staged pipeline, checkpoint via `Pipeline.stage` instead and drop
-    * this cache. It lives until `DedupRun.unpersistCaches` (or
-    * catalog.clearCache(), which Bench and Verify run per query).
+    * an eager local checkpoint and shingling runs once per document. The
+    * checkpoint is MEMORY_AND_DISK (it spills at corpus scale instead of
+    * recomputing, as in Spark ML's MinHashLSHModel), is registered
+    * nowhere, and its blocks go once the frame is unreachable.
     *
-    * The empty-set filter sits above the cache on purpose: below it,
+    * The empty-set filter sits above the checkpoint on purpose: below it,
     * Catalyst pushes the filter under the repartition, and every document
     * is shingled twice — once in the filter on the input's partitions,
     * once in the projection after the exchange. */
   private def shingleHashes(docs: DataFrame, id: String, text: String,
-                            shingleN: Int): (DataFrame, DataFrame) = {
-    val cache = docs
+                            shingleN: Int): DataFrame =
+    docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(col(id).as("__id"), transform(
         array_distinct(Text.shingles(col(text), shingleN)), s => xxhash64(s)).as("__bh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (cache, cache.filter(size(col("__bh")) > 0))
-  }
+      .localCheckpoint()
+      .filter(size(col("__bh")) > 0)
 
   /** k deterministic minhash values from a PRE-HASHED shingle array
     * (`baseHashes` = one xxhash64 per distinct shingle). Each variable-
@@ -238,9 +230,7 @@ object Dedup {
       .filter(col("jac") >= threshold)
 
   /** MinHash-LSH near-duplicate pairs (`id_a`, `id_b`, `jac`) with
-    * exact-Jaccard verification. `run.materialize(f)` consumes the pairs
-    * and releases the intermediate cache in one scope (no lingering
-    * cached relations — asserted in `DataPipelineSpec`).
+    * exact-Jaccard verification.
     *
     * @param k          minhash count (default 64)
     * @param rowsPerBand band size r; recall for similarity s is
@@ -264,13 +254,13 @@ object Dedup {
                     shingleN: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
                     threshold: Double = 0.8, maxBucket: Long = 0L): DedupRun = {
     // one base hash per distinct shingle (hashed once, reused k×),
-    // persisted: see shingleHashes
-    val (cache, sh) = shingleHashes(docs, id, text, shingleN)
+    // checkpointed: see shingleHashes
+    val sh = shingleHashes(docs, id, text, shingleN)
     // candidate pairs: bucket self-join on (band idx, band hash), then
     // DISTINCT before any verification — a pair sharing m bands must be
     // verified once, not m times
     val candidates = keyPairs(bands(sh, k, rowsPerBand, maxBucket), "__id", Seq("__band")).distinct()
-    new DedupRun(verifyJaccard(candidates, sh, sh, threshold), Seq(cache))
+    new DedupRun(verifyJaccard(candidates, sh, sh, threshold))
   }
 
   /** 64-bit SimHash of a token-hash array: per-bit majority vote over the
@@ -308,28 +298,26 @@ object Dedup {
     * with md5 reproduces the signatures bit-for-bit (the DuckDB oracle
     * re-derives them from hex digits). Documents with no tokens are
     * excluded (an empty token multiset has no meaningful signature; the
-    * majority vote would give all-ones). See [[DedupRun]] for the cache. */
+    * majority vote would give all-ones). */
   def simhashRun(docs: DataFrame, id: String = "doc_id", text: String = "text",
                  maxHamming: Int = 3, blockCols: Seq[String] = Nil,
                  portable: Boolean = false): DedupRun = {
     val tokenHash: Column => Column =
       if (portable) Seeds.portableHash64 else (t => xxhash64(t))
-    // one signature per document, persisted: both join sides read it, and
-    // without the cache it is computed twice per document. Documents with
-    // no token get a null signature, dropped ABOVE the cache — a filter
-    // below it would be pushed under the repartition and tokenize every
-    // document twice (see shingleHashes). Released by
-    // DedupRun.unpersistCaches / the harnesses' per-query clearCache().
-    val cache = docs
+    // one signature per document, checkpointed: both join sides read it,
+    // and without the checkpoint it is computed twice per document.
+    // Documents with no token get a null signature, dropped ABOVE the
+    // checkpoint — a filter below it would be pushed under the repartition
+    // and tokenize every document twice (see shingleHashes)
+    val sigs = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select((blockCols.map(col) :+ col(id).as("__id") :+
         transform(Text.tokens(col(text)), tokenHash).as("__th")): _*)
       .withColumn("__sig", when(size(col("__th")) > 0, simhashFromHashes(col("__th"))))
       .drop("__th")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = signaturePairs(cache.filter(col("__sig").isNotNull), maxHamming,
-      id = "__id", sig = "__sig", blockCols = blockCols)
-    new DedupRun(pairs, Seq(cache))
+      .localCheckpoint()
+    new DedupRun(signaturePairs(sigs.filter(col("__sig").isNotNull), maxHamming,
+      id = "__id", sig = "__sig", blockCols = blockCols))
   }
 
   /** Hamming near-dup pairs (`id_a`, `id_b`, `dist`) for ANY 64-bit

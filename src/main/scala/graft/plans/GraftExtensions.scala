@@ -27,8 +27,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach(ext.injectFunction)
     // scale guards (each no-ops unless its session conf flag is set)
     ext.injectOptimizerRule(s => GuardCartesian(s))
-    // HOF dot-product → native kernel (on by default; flag-disabled)
-    ext.injectOptimizerRule(s => KernelFusion(s))
+    // HOF dot-product → native kernel
+    ext.injectOptimizerRule(_ => KernelFusion)
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -27,18 +26,13 @@ import graft.functions.VecDot
   *     identity — exactly the shape `VecDot` implements (null on length
   *     mismatch or null element, like zip_with's null padding).
   *
-  * Enabled by default; disable per session with
-  * `spark.conf.set("spark.graft.fuseVectorKernels", "false")`. Wired via
-  * `GraftExtensions` (injectOptimizerRule) or
+  * Wired via `GraftExtensions` (injectOptimizerRule) or
   * `spark.experimental.extraOptimizations` on a running session.
   */
-case class KernelFusion(session: SparkSession) extends Rule[LogicalPlan] {
-
-  private val FlagKey = "spark.graft.fuseVectorKernels"
+object KernelFusion extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (session.conf.get(FlagKey, "true") != "true") plan
-    else plan.transformAllExpressions {
+    plan.transformAllExpressions {
       case ArrayAggregate(
             ZipWith(a, b, LambdaFunction(mult, Seq(x, y), _)),
             DoubleZero(),

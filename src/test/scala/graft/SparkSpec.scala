@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.execution.SparkPlan
+import graft.plans.PlanShape
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -12,20 +11,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites
 
-  /** Root SQL executions started while `body` runs. */
-  def executionsDuring[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case st: SparkListenerSQLExecutionStart
-          if st.rootExecutionId.forall(_ == st.executionId) => n.incrementAndGet(): Unit
-        case _ =>
-      }
-    }
-    ColumnBridge.waitListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { val r = body; ColumnBridge.waitListenerBusEmpty(spark.sparkContext); (r, n.get) }
-    finally spark.sparkContext.removeSparkListener(listener)
+  /** The executed plan of each SQL execution `body` runs, in order. */
+  def executionsDuring[T](body: => T): (T, Seq[SparkPlan]) = {
+    val (r, ran) = PlanShape.executionsDuring(spark)(body)
+    (r, ran.map(_.executedPlan))
   }
 }
 

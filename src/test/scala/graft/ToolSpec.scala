@@ -30,6 +30,20 @@ class ToolSpec extends SparkSpec {
     } finally Files.delete(out)
   }
 
+  test("plans writes each query's plan and the plan of every execution its build runs") {
+    val out = Files.createTempDirectory("plans")
+    try {
+      Tool.command(Seq("plans", "/root/testdata/sf0.001", out.toString,
+        "q36_minhash_lsh,q2_scan_pushdown"))(spark)
+      def read(f: String) = Files.readString(out.resolve(f))
+      assert(Files.list(out).iterator().asScala.map(_.getFileName.toString).toSet ===
+        Set("q36_minhash_lsh.txt", "q36_minhash_lsh.build1.txt", "q2_scan_pushdown.txt"))
+      // the shingle table is a checkpoint: the query scans it, its build holds the exchange
+      assert(read("q36_minhash_lsh.txt").contains("Scan ExistingRDD"))
+      assert(read("q36_minhash_lsh.build1.txt").contains("RoundRobinPartitioning"))
+    } finally { Files.list(out).iterator().asScala.foreach(Files.delete); Files.delete(out) }
+  }
+
   test("an unknown subcommand is refused with the usage message") {
     for (args <- Seq(Seq("bogus"), Nil, Seq("audit", "onlyOneArg"), Seq("scale", "nope", "/d"),
         Seq("skew"))) {

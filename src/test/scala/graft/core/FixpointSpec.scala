@@ -25,7 +25,7 @@ class FixpointSpec extends SparkSpec {
     assert(last === Some(0L))
     assert(values(state) === Seq(0L, 0L, 0L))
     // a round with a count is exactly one execution: its checkpoint
-    assert(n === rounds)
+    assert(n.size === rounds)
   }
 
   test("the round limit ends a loop that still changes and reports the last count") {
@@ -45,7 +45,7 @@ class FixpointSpec extends SparkSpec {
         })
       assert(rounds === 7, s"every $every")
       assert(last === None)
-      assert(n === settled, s"every $every")
+      assert(n.size === settled, s"every $every")
       assert(values(state) === Seq(7L))
     }
   }
@@ -54,7 +54,7 @@ class FixpointSpec extends SparkSpec {
     val df = Seq((1L, true), (2L, false), (3L, true)).toDF("x", "flag")
     val ((state, last), n) = executionsDuring(Fixpoint.iterate(df, maxIters = 1,
       finish = _.select("x"))((prev, _) => (prev, Some(count(when(col("flag"), lit(1)))))))
-    assert(n === 1)
+    assert(n.size === 1)
     assert(last === Some(2L))
     assert(state.columns.toSeq === Seq("x"))
     assert(values(state) === Seq(1L, 2L, 3L))

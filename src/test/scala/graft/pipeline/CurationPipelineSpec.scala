@@ -12,7 +12,7 @@ import org.apache.spark.sql.graftbridge.CacheBridge
   * fold split, with stages materialized through the versioned Pipeline.
   * The data-pipeline analog of `TemplateAnalysisSpec` — it pins that the
   * curation operators COMPOSE (each is separately oracled by q30-q37/q49/
-  * q67), that the dedup caches are released between stages, and that the
+  * q67), that the dedup stages leave no cached relation behind, and that the
   * kept-set is reproducible under repartitioning. */
 class CurationPipelineSpec extends SparkSpec {
 
@@ -39,7 +39,7 @@ class CurationPipelineSpec extends SparkSpec {
     assert(exact.count() <= nGated)
 
     // --- near-dup pairs → clusters → keep the representative per cluster;
-    //     the DedupRun handle scopes the LSH caches to this stage
+    //     the LSH shingle table is a checkpoint, so no cache is left behind
     val run = Dedup.minhashLshRun(exact, shingleN = 3, k = 64,
       rowsPerBand = 4, threshold = 0.6)
     val (clusters, nPairs) = run.materialize { pairs =>

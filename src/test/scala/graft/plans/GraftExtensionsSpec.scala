@@ -55,7 +55,7 @@ class GraftExtensionsSpec extends SparkSpec {
       "aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, (acc, v) -> acc + v) AS d"))
     val unfused = hof().collect().map(_.get(0)).toSeq
     s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations :+ KernelFusion(s)
+      s.experimental.extraOptimizations :+ KernelFusion
     try {
       // fresh frame: a Dataset caches its QueryExecution, so the
       // pre-rule `hof()` would show the old optimized plan
@@ -77,13 +77,9 @@ class GraftExtensionsSpec extends SparkSpec {
            0.0d, (acc, v) -> acc + v) AS d"""))
       assert(cdf.queryExecution.optimizedPlan.toString.contains("graft_vec_dot"))
       assert(cdf.orderBy("d").head().getDouble(0) === 1.5 * 2.5)
-      // flag disables the rule
-      s.conf.set("spark.graft.fuseVectorKernels", "false")
-      assert(!hof().queryExecution.optimizedPlan.toString.contains("graft_vec_dot"))
     } finally {
-      s.conf.unset("spark.graft.fuseVectorKernels")
       s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations.filterNot(_.isInstanceOf[KernelFusion])
+        s.experimental.extraOptimizations.filterNot(_ == KernelFusion)
     }
   }
 

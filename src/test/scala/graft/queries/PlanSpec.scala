@@ -8,8 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.Md5
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.graftbridge.CacheBridge
 
 /** Physical-plan assertions: these lock in the properties that make the
   * queries survive a 100× scale-up — filters reaching the parquet scan,
@@ -183,6 +185,7 @@ class PlanSpec extends SparkSpec {
       // q181 broadcast-crossJoins the one-row Σn^α scalar into the
       // group-width rate table — scalar shape like q89
       "q181_temperature_sample")
+    spark.catalog.clearCache()
     val offenders = Registry.all.flatMap { q =>
       val p =
         try PlanShape(Registry.queries(q.name)(spark, dir))
@@ -192,6 +195,8 @@ class PlanSpec extends SparkSpec {
       if (cartesian || nlj) Some(q.name) else None
     }
     assert(offenders.isEmpty, s"cartesian/NLJ plans: $offenders")
+    // persist registers at call time: planning alone would leave a cache
+    assert(CacheBridge.noCachedRelations(spark), "a registry query left a cached relation")
   }
 
   test("q146: the point-in-time join plans with NO join operator at all") {
@@ -500,22 +505,26 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q36/q37: documents are tokenized once, above the round-robin exchange") {
-    // the empty-set filter must not be pushed under the repartition: there
-    // it re-runs the tokenizer on the input's partitions before the exchange
+    // and q175, whose batch and corpus sides are one shingle table each.
+    // The tables are checkpoints built in their own SQL executions, so the
+    // pin reads every execution of the query. The empty-set filter must
+    // not be pushed under the repartition: there it re-runs the tokenizer
+    // on the input's partitions before the exchange
     def tokenizes(p: SparkPlan) = p.expressions.exists(_.exists(_.isInstanceOf[Shingles]))
-    for (name <- Seq("q36_minhash_lsh", "q37_simhash")) {
-      val df = Registry.queries(name)(spark, dir)
-      df.collect()
-      val shape = PlanShape(df)
-      val roundRobin = shape.shuffles.filter(_.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
+    for ((name, tables) <- Seq("q36_minhash_lsh" -> 1, "q37_simhash" -> 1,
+        "q175_incremental_near_dup" -> 2)) {
+      val (_, ran) = executionsDuring(Registry.queries(name)(spark, dir).collect())
+      val shapes = ran.map(PlanShape(_))
+      val roundRobin = shapes.flatMap(_.shuffles)
+        .filter(_.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
       assert(roundRobin.nonEmpty, s"$name lost its round-robin repartition")
-      // the cached plan is listed once per scan of the cache: distinct nodes
-      assert(shape.all[SparkPlan].filter(tokenizes).distinct.size == 1,
-        s"$name does not tokenize in exactly one plan node")
+      assert(shapes.map(_.all[SparkPlan].count(tokenizes)).sum == tables,
+        s"$name does not tokenize in exactly $tables plan nodes")
       roundRobin.foreach { e =>
         assert(!PlanShape(e.child).all[SparkPlan].exists(tokenizes),
           s"$name tokenizes below the round-robin exchange:\n$e")
       }
+      assert(shapes.forall(_.count[InMemoryTableScanExec] == 0), s"$name reads a cached relation")
     }
   }
 
@@ -529,10 +538,6 @@ class PlanSpec extends SparkSpec {
     }
     assert(distinct.nonEmpty && distinct.forall(_.metrics.contains("numOutputRows")),
       s"no distinct over (id_a, id_b):\n${df.queryExecution.executedPlan}")
-    // registry queries drop their DedupRun handles: release the shingle
-    // and signature caches of this test and the q36/q37 test above, which
-    // later suites' no-cached-relations checks would otherwise see
-    spark.catalog.clearCache()
   }
 
   test("whole-stage codegen covers the scan-filter-project pipeline") {
